@@ -336,8 +336,7 @@ object Bench {
       }
     // distinct: a query that fails cold AND on a warm pass would
     // otherwise appear repeatedly in the artifact (ADVICE r15)
-    val failed =
-      failures.reverse.distinct.map("\"" + _ + "\"").mkString("[", ",", "]")
+    val failed = jsonNames(failures.reverse.distinct)
     // `note` pins the two methodology facts a reader comparing rounds
     // needs: what the two query columns mean, and that ingest times a
     // warm run after an untimed full-pipeline warm-up (since r5 —
@@ -356,15 +355,18 @@ object Bench {
       "since r17 load_suspect queries are automatically RE-RUN at end of bench after a bounded wait-for-quiet, and the rerun columns land beside the originals in the detail record (rerun.warm_med is the number to read for a flagged query); " +
       "since r18 a query is also rerun-flagged on warm-pass SPREAD (max/min > 3x and max-min > 0.5s, stamped spread_suspect) - the 1-min load stamp misses sub-minute contamination spikes; " +
       "since r18 the cascade DEFAULT is back to one pin (perFile=100) x 1 rep - the r17 default (100,500 x 3 reps, env-restorable via SPARK_GRAFT_CASCADE_PER_FILE/SPARK_GRAFT_CASCADE_REPS) blew the driver's wall budget; ingest_cascade_blocks_per_sec stays the first pin's rep-median, ingest_cascade_pins carries all reps; " +
-      "since r18 the sum of all wait-for-quiet pauses is capped (SPARK_GRAFT_BENCH_WAIT_TOTAL_SEC, default 600) and the stdout contract line is SHORT (headline totals + the cold per-query map at ms precision, printed after spark.stop with stderr quiesced) - r6-r16 lines grew past the 4 KiB atomic-pipe-write limit and concurrent executor stderr corrupted them mid-line (BENCH parsed:null on rc=0); queries_warm and this note moved to this detail file"
+      "since r18 the sum of all wait-for-quiet pauses is capped (SPARK_GRAFT_BENCH_WAIT_TOTAL_SEC, default 600) and the stdout contract line is SHORT (headline totals, printed after spark.stop with stderr quiesced) - r6-r16 lines grew past the 4 KiB atomic-pipe-write limit and concurrent executor stderr corrupted them mid-line (BENCH parsed:null on rc=0); queries_warm and this note moved to this detail file; " +
+      "the line now carries the failed and load/spread-suspect query NAMES instead of the per-query cold map (every per-query number is in this file) and is held under 4096 bytes by construction; this file is named per cpu count (BENCH_DETAIL_c<cpus>.json) so the 8- and 32-core runs keep separate records"
     val loadEnd = sampleLoad()
     // SELF-SUFFICIENT per-query artifact (VERDICT r14 #3): the driver's
     // BENCH_r*.json keeps only a 2000-char stdout tail — r14's per-query
     // warm column and even ingest_blocks_per_sec were truncated away.
     // This file carries every number the stdout line does PLUS all warm
     // runs and their median, and is committed to the tree each round.
+    // cpus-suffixed so the 8-core and 32-core runs of one round do not
+    // overwrite each other's detail record
     val detailPath = sys.env.getOrElse(
-      "SPARK_GRAFT_BENCH_DETAIL", "BENCH_DETAIL.json")
+      "SPARK_GRAFT_BENCH_DETAIL", s"BENCH_DETAIL_c$cpus.json")
     val perQuery = results.map { case (k, (cold, warms, qLoad)) =>
       val rerun = rerunResults.get(k).map { case (c, ws, l) =>
         s""","rerun":{"cold":$c,"warm":[${ws.mkString(",")}],""" +
@@ -409,43 +411,10 @@ object Bench {
     catch { case e: Throwable =>
       System.err.println(s"[bench] detail write to $detailPath FAILED: $e")
     }
-    // THE stdout contract line — kept SHORT and printed LAST (VERDICT
-    // r17 #2). Root cause of r6–r16 `parsed: null` on rc=0 runs: the
-    // line had grown past Linux's 4 KiB atomic-pipe-write guarantee
-    // (PIPE_BUF), so its write was split into several syscalls, and any
-    // concurrently-logging executor thread could interleave stderr into
-    // the middle of the line (r17's clean 8-core run parsed the same
-    // 13 KB line fine — the corruption is a concurrency race, not a
-    // length cap). Three defenses: (a) the line carries only the
-    // headline scalars + the cold per-query map at ms precision
-    // (queries_warm, cascade pins, phase stamps and the methodology
-    // note live in the detail file — every query NAME stays, none
-    // dropped); (b) it is printed AFTER spark.stop(), when no executor
-    // or listener thread can write stderr anymore; (c) stderr is
-    // flushed first. Result: < 4 KiB, single atomic write, last thing
-    // on stdout.
-    def ms3(d: Double): String =
-      if (d < 0) "-1" else {
-        val s = f"$d%.3f"
-        if (s.contains('.')) s.reverse.dropWhile(_ == '0').reverse
-          .stripSuffix(".") else s
-      }
-    val qsShort = results.map { case (k, v) => "\"" + k + "\":" + ms3(v._1) }
-      .mkString("{", ",", "}")
-    val shortNote = "cold per-query map at ms precision; queries_warm, " +
-      "per-query warm passes/medians/load stamps/reruns, cascade pins " +
-      "and the methodology note are in bench_detail"
-    val line = s"""{"metric":"total","value":${ms3(total)},"unit":"sec"""" +
-      s""","total_warm":${ms3(totalWarm)},"queries":$qsShort""" +
-      s""","failed":$failed,"ingest_blocks_per_sec":${ms3(blocksPerSec)}""" +
-      s""","ingest_blocks_n":$nBlocks""" +
-      s""","ingest_cascade_blocks_per_sec":${ms3(cascadeBps)}""" +
-      s""","ingest_cascade_blocks_n":$cascadeBlocks""" +
-      s""","ingest_cascade_per_file":$perFile""" +
-      s""","load_avg_start":${ms3(loadStart)},"load_avg_end":${ms3(loadEnd)}""" +
-      s""","load_max":${ms3(loadMax)},"load_gate":$maxLoad""" +
-      s""","load_contaminated":$loadContaminated,"sf":"$sfDir"""" +
-      s""","bench_detail":"$detailPath","note":"$shortNote"}"""
+    val line = contractLine(total, totalWarm, failures.reverse.distinct,
+      suspects, blocksPerSec, nBlocks, cascadeBps, cascadeBlocks, perFile,
+      loadStart, loadEnd, loadMax, maxLoad, loadContaminated, sfDir,
+      detailPath)
     spark.sparkContext.setLogLevel("ERROR")
     spark.stop()
     System.err.flush()
@@ -453,5 +422,58 @@ object Bench {
     println(line)
     System.out.flush()
     if (failures.nonEmpty) sys.exit(1)
+  }
+
+  /** Linux's atomic pipe-write size (PIPE_BUF): a longer stdout line is
+    * split over several writes, and a concurrently logging thread can
+    * interleave stderr into the middle of it. */
+  val PipeBuf = 4096
+
+  private def jsonNames(names: Seq[String]): String =
+    names.map("\"" + _ + "\"").mkString("[", ",", "]")
+
+  /** Seconds at ms precision, trailing zeros dropped; locale-independent
+    * (a comma-decimal default locale would corrupt the JSON). */
+  def ms3(d: Double): String =
+    if (d < 0) "-1" else {
+      val s = String.format(java.util.Locale.ROOT, "%.3f", Double.box(d))
+      s.reverse.dropWhile(_ == '0').reverse.stripSuffix(".")
+    }
+
+  /** THE stdout contract line — the headline scalars, the names of the
+    * failed and load-suspect queries, and a pointer to the detail file,
+    * which holds every per-query number (r6–r16 lines carried the
+    * per-query maps and grew past [[PipeBuf]]). The line is printed
+    * after `spark.stop()`, last on stdout. It stays under [[PipeBuf]]
+    * bytes by construction: should the name lists ever push it over,
+    * names are dropped from the end of `suspects`, then of `failed`
+    * (the `n_failed` / `n_suspects` counts stay exact and
+    * `names_truncated` says so). */
+  def contractLine(total: Double, totalWarm: Double, failed: Seq[String],
+      suspects: Seq[String], blocksPerSec: Double, nBlocks: Int,
+      cascadeBps: Double, cascadeBlocks: Int, perFile: Int,
+      loadStart: Double, loadEnd: Double, loadMax: Double, loadGate: Double,
+      loadContaminated: Boolean, sf: String, detailPath: String): String = {
+    def render(f: Seq[String], s: Seq[String]): String =
+      s"""{"metric":"total","value":${ms3(total)},"unit":"sec"""" +
+        s""","total_warm":${ms3(totalWarm)}""" +
+        s""","failed":${jsonNames(f)},"n_failed":${failed.size}""" +
+        s""","suspects":${jsonNames(s)},"n_suspects":${suspects.size}""" +
+        s""","names_truncated":${f.size < failed.size || s.size < suspects.size}""" +
+        s""","ingest_blocks_per_sec":${ms3(blocksPerSec)}""" +
+        s""","ingest_blocks_n":$nBlocks""" +
+        s""","ingest_cascade_blocks_per_sec":${ms3(cascadeBps)}""" +
+        s""","ingest_cascade_blocks_n":$cascadeBlocks""" +
+        s""","ingest_cascade_per_file":$perFile""" +
+        s""","load_avg_start":${ms3(loadStart)},"load_avg_end":${ms3(loadEnd)}""" +
+        s""","load_max":${ms3(loadMax)},"load_gate":${ms3(loadGate)}""" +
+        s""","load_contaminated":$loadContaminated,"sf":"$sf"""" +
+        s""","bench_detail":"$detailPath"}"""
+    val shrinking = Iterator.iterate((failed.size, suspects.size)) {
+      case (f, s) => if (s > 0) (f, s - 1) else (f - 1, 0)
+    }.takeWhile(_._1 >= 0)
+    shrinking.map { case (f, s) => render(failed.take(f), suspects.take(s)) }
+      .find(_.getBytes("UTF-8").length < PipeBuf)
+      .getOrElse(render(Nil, Nil))
   }
 }

@@ -20,40 +20,26 @@ object SparkEntry {
 
   /** Queries excluded from the throughput bench (still in the
     * CORRECTNESS gate): the `near_*` family runs on a constant-size
-    * golden fixture, and `d_stream_minhash` is the streaming twin of
-    * the benched `d_minhash_pairs` — its wall time is micro-batch
-    * orchestration (checkpoint commits, restarts), not data-volume
-    * work, so timing it would measure the harness, not the operator. */
+    * golden fixture; every streaming twin ([[graft.streaming.StreamTwin
+    * .twins]]) times micro-batch orchestration (checkpoint commits,
+    * restarts), not data-volume work; and the model-store twins'
+    * wall time is dominated by the train pass they deliberately re-run
+    * to produce the stored versions — the benched train-inline queries
+    * already time that work. */
   val correctnessOnly: String => Boolean =
     name => name.startsWith("near_") ||
-      name == "d_stream_minhash" || name == "d_stream_prefix" ||
-      name == "d_stream_spans" || name == "g_stream_retention" ||
-      name == "pipe_stream_clean" ||
-      name == "t_stream_dataset_card" || name == "s_stream_ann_lsh" ||
-      name == "s_stream_ann_kmeans" ||
-      name == "w_stream_rolling_7d" || name == "t_stream_heavy_hitters" ||
-      name == "w_stream_anomaly" || name == "w_stream_range_join" ||
-      name == "w_stream_gap_fill" || name == "k_stream_scd2" ||
-      name == "w_stream_interval_coverage" || name == "t_stream_lm_score" ||
-      name == "w_stream_active_users" ||
-      name == "t_stream_sample_priority" ||
-      name == "t_stream_weighted_percentiles" ||
-      name == "w_stream_funnel" ||
-      name == "t_stream_pareto" || name == "k_stream_tombstone" ||
-      name == "w_stream_rfm" || name == "w_stream_anomaly_mad" ||
-      name == "g_stream_pagerank" || name == "g_stream_bfs" ||
-      name == "d_stream_dup_groups" ||
-      // model-store twins: their wall time is dominated by the train
-      // pass they deliberately re-run to produce the stored versions —
-      // the benched train-inline queries already time that work
+      graft.streaming.StreamTwin.byName.contains(name) ||
       name == "s_ann_kmeans_stored" || name == "s_ann_pq_stored" ||
       name == "t_bpe_encode_stored" || name == "t_lm_score_stored" ||
-      name == "s_ann_ivfpq_stored" || name == "s_stream_decontaminate" ||
-      name == "t_stream_dsir" || name == "s_stream_prune" ||
-      name == "g_stream_components"
+      name == "s_ann_ivfpq_stored"
 
-  /** One entry per implemented operator from SURVEY.md §2. */
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  /** One entry per implemented operator from SURVEY.md §2, plus one per
+    * streaming twin. */
+  def queries: Map[String, (SparkSession, String) => DataFrame] =
+    batchQueries ++ graft.streaming.StreamTwin.twins.map(t =>
+      t.name -> graft.streaming.StreamTwin.query(t))
+
+  private def batchQueries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // Core relational / gold layer (SURVEY §2.6)
     "q1_pricing_summary"   -> (TpchQueries.q1PricingSummary _),
     "q3_shipping_priority" -> (TpchQueries.q3ShippingPriority _),
@@ -105,38 +91,16 @@ object SparkEntry {
     // daily-count anomaly days per type: integer-exact 2-sigma test
     // (no float compare anywhere in the detection set)
     "w_anomaly_zscore"     -> (EventQueries.wAnomalyZscore _),
-    // incremental twin: daily count grid as a summing MV, shared
-    // detector applied at read; same oracle as the batch query
-    "w_stream_anomaly"     -> ((s, d) =>
-      graft.streaming.StreamingAnomaly.wStreamAnomaly(s, d)),
     // SCD type-2 history: per-user state runs -> validity intervals
     "k_scd2_history"       -> (EventQueries.kScd2History _),
     // dense hourly grid with forward fill (gap-filled time series)
     "w_gap_fill"           -> ((s, d) => EventQueries.wGapFill(s, d)),
-    // streaming twins (r11): summing-MV hourly grid / append-only
-    // event-log MV, read through the SAME shared implementations
-    "w_stream_gap_fill"    -> ((s, d) =>
-      graft.streaming.StreamingEventLog.wStreamGapFill(s, d)),
-    "k_stream_scd2"        -> ((s, d) =>
-      graft.streaming.StreamingEventLog.kStreamScd2(s, d)),
-    "w_stream_interval_coverage" -> ((s, d) =>
-      graft.streaming.StreamingEventLog.wStreamIntervalCoverage(s, d)),
     "w_hourly_window"      -> (EventQueries.wHourlyWindow _),
     "w_asof_join"          -> (EventQueries.wAsofJoin _),
     "w_range_join"         -> ((s, d) => EventQueries.wRangeJoin(s, d)),
-    // the watermarked STREAM-STREAM interval join (symmetric join
-    // state, checkpoint-restored across a mid-stream restart);
-    // same oracle as the batch banded range join
-    "w_stream_range_join"  -> ((s, d) =>
-      graft.streaming.StreamingRangeJoin.wStreamRangeJoin(s, d)),
     "g_rollup_metrics"     -> (EventQueries.gRollupMetrics _),
     "g_grouping_sets"      -> (EventQueries.gGroupingSets _),
     "w_rolling_7d"         -> (EventQueries.wRolling7d _),
-    // incremental twin: the daily grid maintained as a summing MV by
-    // the real streaming engine (checkpoint, mid-stream restart,
-    // merge), RANGE window applied at read; same oracle as the batch
-    "w_stream_rolling_7d"  -> ((s, d) =>
-      graft.streaming.StreamingRolling.wStreamRolling7d(s, d)),
     "w_value_deciles"      -> (EventQueries.wValueDeciles _),
     "g_cube_metrics"       -> (EventQueries.gCubeMetrics _),
     "v_approx_distinct"    -> (EventQueries.vApproxDistinct _),
@@ -144,11 +108,6 @@ object SparkEntry {
     "j_full_outer_recon"   -> (EventQueries.jFullOuterRecon _),
     "g_pivot_daily"        -> (EventQueries.gPivotDaily _),
     "g_retention_cohorts"  -> (EventQueries.gRetentionCohorts _),
-    // incremental twin: the distinct (user, day) activity set
-    // maintained by the real streaming engine (checkpoint, mid-stream
-    // restart), cohort matrix answered at read; same oracle
-    "g_stream_retention"   -> ((s, d) =>
-      graft.streaming.StreamingRetention.gStreamRetention(s, d)),
     "g_funnel_steps"       -> (EventQueries.gFunnelSteps _),
     "g_unpivot_daily"      -> (EventQueries.gUnpivotDaily _),
     "v_set_ops"            -> (EventQueries.vSetOps _),
@@ -171,11 +130,6 @@ object SparkEntry {
     "t_dsir_target_source" -> ((s, d) => TextAnalysis.tDsirWeights(s, d,
       target = org.apache.spark.sql.functions.col("source")
         .isin("src0", "src1"))),
-    // streaming twin: per-(doc,bucket) counts land under PK FINAL per
-    // micro-batch (mid-stream restart + compaction in the path); the
-    // model + fold + top-k derive at read via the shared body
-    "t_stream_dsir"     -> ((s, d) =>
-      graft.streaming.StreamingDsir.tStreamDsir(s, d)),
     "t_fingerprint"     -> (TextAnalysis.tFingerprint _),
     "t_vocab_topk"      -> ((s, d) => TextAnalysis.tVocabTopk(s, d)),
     "t_bigram_topk"     -> ((s, d) => TextAnalysis.tBigramTopk(s, d)),
@@ -189,10 +143,6 @@ object SparkEntry {
     // CCNet-style trigram-LM quality scoring (train split -> all docs,
     // stupid backoff, floor-scaled integer probabilities)
     "t_lm_score"        -> ((s, d) => TextAnalysis.tLmScore(s, d)),
-    // streaming twin: model counts as summing MVs + PK-FINAL trigram
-    // facts, the shared scoring join at read
-    "t_stream_lm_score" -> ((s, d) =>
-      graft.streaming.StreamingLmScore.tStreamLmScore(s, d)),
     // inverted-index posting table (tf/first_pos + df/cf per term)
     "t_inverted_index"  -> (TextAnalysis.tInvertedIndex _),
     // Okapi BM25 phrase retrieval, integer-exact end to end
@@ -200,16 +150,8 @@ object SparkEntry {
     // weighted priority sampling: exact-k per language, bottom-k by
     // h60(doc)/n_chars (Duffield-Lund-Thorup), two-phase cut
     "t_sample_priority" -> ((s, d) => TextAnalysis.tSamplePriority(s, d)),
-    // streaming twin: append-only facts MV under PK FINAL, the shared
-    // bottom-k at read (selection is a pure function of the fact set)
-    "t_stream_sample_priority" -> ((s, d) =>
-      graft.streaming.StreamingSample.tStreamSamplePriority(s, d)),
     // two-phase skyline: non-dominated docs under (max chars, min tokens)
     "t_pareto_frontier" -> ((s, d) => TextAnalysis.tParetoFrontier(s, d)),
-    // streaming twin: append-only point facts under PK FINAL, the
-    // shared skyline at read (frontier non-additive but log-derived)
-    "t_stream_pareto"   -> ((s, d) =>
-      graft.streaming.StreamingSample.tStreamPareto(s, d)),
     // hybrid retrieval: BM25 + cosine rankings fused by integer RRF
     "t_rrf_fusion"      -> ((s, d) => TextAnalysis.tRrfFusion(s, d)),
     // Morton z-order locality report (the OPTIMIZE ZORDER layout math)
@@ -222,10 +164,6 @@ object SparkEntry {
     // ClickHouse windowFunnel analog: per-user deepest chain level,
     // histogram with reach + step conversion
     "w_funnel_steps"    -> ((s, d) => EventQueries.wFunnelSteps(s, d)),
-    // streaming twin: append-only event-log MV under PK FINAL, the
-    // shared funnel read (levels non-additive but log-derived)
-    "w_stream_funnel"   -> ((s, d) =>
-      graft.streaming.StreamingEventLog.wStreamFunnel(s, d)),
     // ReplacingMergeTree(ver, is_deleted) DELETE path: tombstone wave,
     // replay, compaction survival, resurrection
     "k_tombstone_delete" -> (EventQueries.kTombstoneDelete _),
@@ -241,19 +179,12 @@ object SparkEntry {
     // connected components of the co-occurrence graph (the shared
     // min-label body over the maintained edge MV)
     "g_components"      -> (EventQueries.gComponents _),
-    // streamed twin over the incrementally-maintained edge MV (the
-    // shared min-label body derives components at read)
-    "g_stream_components" -> ((s, d) =>
-      graft.streaming.StreamingGraph.gStreamComponents(s, d)),
     // integer-exact damped PageRank (3 unrolled sparse mat-vec steps)
     "g_pagerank"         -> ((s, d) => EventQueries.gPageRank(s, d)),
     // last-touch attribution: windowed argMax within a 7d lookback
     "g_attribution"      -> ((s, d) => EventQueries.gAttribution(s, d)),
     // exact DAU/WAU: trailing distinct via bounded 7x fact fan-out
     "w_active_users"     -> (EventQueries.wActiveUsers _),
-    // streaming twin over the SAME activity MV as g_stream_retention
-    "w_stream_active_users" -> ((s, d) =>
-      graft.streaming.StreamingRetention.wStreamActiveUsers(s, d)),
     // cohort LTV: cumulative DECIMAL revenue along each cohort's axis
     "w_cohort_ltv"       -> (EventQueries.wCohortLtv _),
     // two-sample KS drift (train vs holdout lengths), integer-exact
@@ -268,10 +199,6 @@ object SparkEntry {
     "s_knn_classify"     -> ((s, d) => Similarity.sKnnClassify(s, d)),
     // Simpson lexical concentration (exact-rational diversity index)
     "t_simpson_diversity" -> (TextAnalysis.tSimpsonDiversity _),
-    // tombstone-DELETE path through the real streaming engine
-    // (mid-stream restart + compaction); same oracle as the batch twin
-    "k_stream_tombstone" -> ((s, d) =>
-      graft.streaming.StreamingEventLog.kStreamTombstone(s, d)),
     // recall@k of the IVF index vs the brute-force baseline, in-gate
     "s_ann_recall"       -> ((s, d) => Similarity.sAnnRecall(s, d)),
     // exact Jaccard histogram >= 0.70 with retained-pair curve — the
@@ -280,27 +207,11 @@ object SparkEntry {
       Dedup.dThresholdCalibration(s, d)),
     // robust (median/MAD) daily-volume anomaly days — integer-exact
     "w_anomaly_mad"      -> (EventQueries.wAnomalyMad _),
-    // streaming twin: the same robust read over the incrementally
-    // summed daily grid (shared MV shape with w_stream_anomaly)
-    "w_stream_anomaly_mad" -> ((s, d) =>
-      graft.streaming.StreamingAnomaly.wStreamAnomalyMad(s, d)),
     // multi-source BFS min-hop distances (<=3) from the seed set
     "g_bfs_distance"     -> ((s, d) => EventQueries.gBfsDistance(s, d)),
-    // streaming twin: RFM from the append-only purchase log at read
-    "w_stream_rfm"       -> ((s, d) =>
-      graft.streaming.StreamingEventLog.wStreamRfm(s, d)),
     // behavior-flow transition matrix (from -> to counts + P)
     "g_event_transitions" -> (EventQueries.gEventTransitions _),
     // ---- round 13 ----
-    // PageRank over the INCREMENTALLY-maintained co-occurrence edge MV
-    // (facts PK-FINAL + pair-count summing cells, mid-stream restart +
-    // compaction of both state tables); same oracle as batch g_pagerank
-    "g_stream_pagerank"  -> ((s, d) =>
-      graft.streaming.StreamingGraph.gStreamPagerank(s, d)),
-    // BFS over the same incrementally-maintained edge MV; same oracle
-    // as batch g_bfs_distance
-    "g_stream_bfs"       -> ((s, d) =>
-      graft.streaming.StreamingGraph.gStreamBfs(s, d)),
     // model-store apply twins: train -> save stale v1 -> save real v2
     // -> load latest (PK-FINAL) -> apply via the SHARED search/encode/
     // score bodies; same oracles as the train-inline queries
@@ -315,10 +226,6 @@ object SparkEntry {
     // quantilesExactWeighted analog: token-weighted length quantiles
     "t_weighted_percentiles" ->
       ((s, d) => TextAnalysis.tWeightedPercentiles(s, d)),
-    // streaming twin: the ADDITIVE (lang, value) weight histogram as a
-    // summing MV, the shared nearest-rank lookup at read
-    "t_stream_weighted_percentiles" -> ((s, d) =>
-      graft.streaming.StreamingWeighted.tStreamWeightedPercentiles(s, d)),
     "t_repetition"      -> (TextAnalysis.tRepetition _),
     "t_tfidf_topk"      -> ((s, d) => TextAnalysis.tTfidfTopk(s, d)),
     "t_pii_scrub"       -> (TextAnalysis.tPiiScrub _),
@@ -330,10 +237,6 @@ object SparkEntry {
     // CMS candidates -> exact verify: guaranteed φ-fraction heavy
     // hitters (output exact, sketch is scan-side pruning only)
     "t_heavy_hitters"   -> ((s, d) => TextAnalysis.tHeavyHitters(s, d)),
-    // incremental twin: exact vocabulary counts as a summing MV,
-    // φ-threshold applied at read; same oracle as the batch query
-    "t_stream_heavy_hitters" -> ((s, d) =>
-      graft.streaming.StreamingHeavyHitters.tStreamHeavyHitters(s, d)),
     // sliding-window token chunking (stride overlap, truncating tail)
     "t_chunk_windows"   -> ((s, d) => TextAnalysis.tChunkWindows(s, d)),
     // greedy quality-ranked selection under a per-source token budget
@@ -345,11 +248,6 @@ object SparkEntry {
     "t_vocab_growth"    -> ((s, d) => TextAnalysis.tVocabGrowth(s, d)),
     // collocation mining by lift (the monotone pre-log PMI ranking)
     "t_collocations"    -> ((s, d) => TextAnalysis.tCollocations(s, d)),
-    // incremental twin: summing-MV card maintained by the real
-    // streaming engine (checkpoint, mid-stream restart, merge);
-    // same oracle as the batch card
-    "t_stream_dataset_card" -> ((s, d) =>
-      graft.streaming.StreamingDatasetCard.tStreamDatasetCard(s, d)),
     "d_exact_dedup"     -> (Dedup.dExactDedup _),
     "d_minhash_pairs"   -> ((s, d) => Dedup.dMinhashPairs(s, d)),
     "d_ngram_pairs"     -> ((s, d) => Dedup.dNgramPairs(s, d)),
@@ -359,19 +257,6 @@ object SparkEntry {
     "d_simhash"         -> (Dedup.dSimhash _),
     "d_shingle_novelty" -> (Dedup.dShingleNovelty _),
     "d_simhash_pairs"   -> ((s, d) => Dedup.dSimhashPairs(s, d)),
-    // incremental dedup through the real streaming engine (checkpoint,
-    // mid-stream restart); same oracle as the batch twin
-    "d_stream_minhash"  -> ((s, d) =>
-      graft.streaming.StreamingDedup.dStreamMinhash(s, d)),
-    // components derived AT READ from the incrementally-maintained
-    // pair MV; same oracle as the batch d_dup_groups (r13)
-    "d_stream_dup_groups" -> ((s, d) =>
-      graft.streaming.StreamingDedup.dStreamDupGroups(s, d)),
-    // incremental EXACT prefix join (one-sided prefix theorem — recall
-    // 1 under evolving document frequencies); same oracle as the batch
-    // prefix twin
-    "d_stream_prefix"   -> ((s, d) =>
-      graft.streaming.StreamingPrefix.dStreamPrefix(s, d)),
     "d_embed_dedup"     -> ((s, d) => Similarity.sEmbedDedup(s, d)),
     // SemDeDup: trained k-means clusters, then prune within clusters
     // only — the cluster-bounded sibling of the exact grid miner
@@ -379,11 +264,6 @@ object SparkEntry {
     // substring-level dedup: duplicated-SPAN coverage per document
     // (corpus-wide window occurrence + per-doc island merge)
     "d_dup_spans"       -> ((s, d) => Dedup.dDupSpans(s, d)),
-    // incremental twin: the window index maintained by the real
-    // streaming engine (checkpoint, mid-stream restart), span report
-    // answered from the accumulated index; same oracle as the batch
-    "d_stream_spans"    -> ((s, d) =>
-      graft.streaming.StreamingSpans.dStreamSpans(s, d)),
     // directed containment join (asymmetric set similarity): the
     // quote/excerpt relation Jaccard ignores; exact by the one-sided
     // prefix theorem over the same modeled corpus as d_dup_spans
@@ -404,32 +284,14 @@ object SparkEntry {
     "d_block_dedup"     -> ((s, d) => Dedup.dBlockDedup(s, d)),
     // full cleaning pipeline: gates -> exact dedup -> near-dup removal
     "pipe_corpus_clean" -> (CorpusPipeline.pipeCorpusClean _),
-    // incremental twin through the real streaming engine (checkpoint,
-    // mid-stream restart); same oracle as the batch pipeline
-    "pipe_stream_clean" -> ((s, d) =>
-      graft.streaming.StreamingCorpusClean.pipeStreamClean(s, d)),
     "s_cosine_topk"     -> ((s, d) => Similarity.sCosineTopk(s, d)),
     // embedding-cosine eval-set leakage report (the n-gram
     // decontamination's semantic twin): per probe, leak count at the
     // 0.4 near-dup line + worst offender; zero-leak probes keep a row
     "s_decontaminate"   -> ((s, d) => Similarity.sDecontaminate(s, d)),
-    // CONTINUOUS decontamination: the corpus streams into a PK-FINAL
-    // embedding index (checkpoint + mid-stream restart) and the SAME
-    // bounded-probe census runs over the accumulated index; same oracle
-    "s_stream_decontaminate" -> ((s, d) =>
-      graft.streaming.StreamingAnnIndex.sStreamDecontaminate(s, d)),
     "s_cosine_pairs"    -> ((s, d) => Similarity.sCosinePairs(s, d)),
     "s_ann_ivf"         -> ((s, d) => Similarity.sAnnIvf(s, d)),
     "s_ann_lsh"         -> ((s, d) => Similarity.sAnnLsh(s, d)),
-    // the same index maintained as a streaming MV (checkpoint,
-    // mid-stream restart); same probe set, same oracle as the batch
-    "s_stream_ann_lsh"  -> ((s, d) =>
-      graft.streaming.StreamingAnnIndex.sStreamAnnLsh(s, d)),
-    // the FULL production ANN topology: stored quantizer (versioned
-    // model store) + corpus streamed through the fixed model into an
-    // index MV + the shared multi-probe search; same oracle as batch
-    "s_stream_ann_kmeans" -> ((s, d) =>
-      graft.streaming.StreamingAnnIndex.sStreamAnnKmeans(s, d)),
     // trained k-means quantizer: deterministic fixed-seed Lloyd with a
     // quantized (order-independent) update -> the oracle replays both
     // iterations as CTEs and hash-matches exactly
@@ -450,10 +312,6 @@ object SparkEntry {
     // quantizer, oracle composes the Lloyd replay with a per-cell rank
     "s_prune_prototypes" -> ((s, d) =>
       Similarity.sPrunePrototypes(s, d)),
-    // streaming twin: stored quantizer + PK-FINAL prototypicality
-    // facts (mid-stream restart in the path), rank-and-cut at read
-    "s_stream_prune"    -> ((s, d) =>
-      graft.streaming.StreamingAnnIndex.sStreamPrune(s, d)),
     // both stored halves (coarse quantizer + residual books) ride the
     // versioned model store past a stale v1; same oracle (same pins)
     "s_ann_ivfpq_stored" -> ((s, d) =>
@@ -1134,51 +992,40 @@ object SparkEntry {
       |SELECT query_id, CAST(rk AS BIGINT) AS rank, neighbor_id, cosine
       |FROM r WHERE rk <= 3 ORDER BY query_id, rank""".stripMargin
 
+  /** A streaming twin answers with its batch query's oracle, by
+    * construction of [[graft.streaming.StreamTwin.twins]]. */
   def oracleSql: Map[String, String] = {
-    val m = oracleSqlBase
-    // streaming twins of the round-11 event operators answer from their
-    // MV exactly what the batch query answers from the table — same
-    // oracle by construction (the w_stream_anomaly precedent)
-    m ++ Map(
-      "w_stream_gap_fill" -> m("w_gap_fill"),
-      "k_stream_scd2" -> m("k_scd2_history"),
-      "w_stream_interval_coverage" -> m("w_interval_coverage"),
-      "t_stream_sample_priority" -> m("t_sample_priority"),
-      "t_stream_weighted_percentiles" -> m("t_weighted_percentiles"),
-      "w_stream_funnel" -> m("w_funnel_steps"),
-      "t_stream_pareto" -> m("t_pareto_frontier"),
+    val base = oracleSqlBase
+    val m = base ++ Map(
       // round 12: star-contraction CC computes the same component
-      // labels as the pointer-doubling impl; the streaming tombstone
-      // path must equal the batch sink scenario's alive set
-      "d_cc_stars" -> m("d_dup_groups"),
-      "k_stream_tombstone" -> m("k_tombstone_delete"),
-      "w_stream_rfm" -> m("w_rfm"),
-      "w_stream_anomaly_mad" -> m("w_anomaly_mad"),
-      // round 13: the incrementally-maintained edge MV feeds the SAME
-      // from-edges PageRank body as the batch query; the model-store
-      // apply twins read the stored latest version into the SAME
-      // search/encode/score bodies as the train-inline queries
-      "g_stream_pagerank" -> m("g_pagerank"),
-      "g_stream_bfs" -> m("g_bfs_distance"),
-      "d_stream_dup_groups" -> m("d_dup_groups"),
-      "s_stream_ann_kmeans" -> m("s_ann_kmeans"),
-      "s_ann_kmeans_stored" -> m("s_ann_kmeans"),
-      "s_ann_pq_stored" -> m("s_ann_pq"),
-      "t_bpe_encode_stored" -> m("t_bpe_encode"),
-      "t_lm_score_stored" -> m("t_lm_score"),
-      // round 14: the IVFADC stored twin applies the SAME composed
-      // search body over the stored model pair; the streamed
-      // decontamination census runs the SAME bounded-probe report over
-      // the incrementally-accumulated PK-FINAL embedding index
-      "s_ann_ivfpq_stored" -> m("s_ann_ivfpq"),
-      "s_stream_decontaminate" -> m("s_decontaminate"),
-      // the streamed DSIR facts MV feeds the SAME model+fold+top-k
-      // read body as the batch selector; the streamed prototypicality
-      // facts feed the SAME rank-and-cut read as the batch pruner
-      "t_stream_dsir" -> m("t_dsir_weights"),
-      "s_stream_prune" -> m("s_prune_prototypes"),
-      "g_stream_components" -> m("g_components"))
+      // labels as the pointer-doubling impl
+      "d_cc_stars" -> base("d_dup_groups"),
+      // the model-store apply twins read the stored latest version into
+      // the SAME search/encode/score bodies as the train-inline queries
+      "s_ann_kmeans_stored" -> base("s_ann_kmeans"),
+      "s_ann_pq_stored" -> base("s_ann_pq"),
+      "t_bpe_encode_stored" -> base("t_bpe_encode"),
+      "t_lm_score_stored" -> base("t_lm_score"),
+      "s_ann_ivfpq_stored" -> base("s_ann_ivfpq"))
+    m ++ graft.streaming.StreamTwin.twins.map(t => t.name -> m(t.batch))
   }
+
+  /** Exact all-pairs 3-shingle Jaccard >= 0.8 — the near-dup pair
+    * oracle every candidate generator must converge on. */
+  private val allPairsJaccardSql: String =
+    """WITH sh AS (
+      |  SELECT doc_id, list_distinct(list_transform(
+      |    range(1, greatest(len(t) - 1, 1)),
+      |    i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2])) AS ss
+      |  FROM (SELECT doc_id, string_split_regex(trim(text), '\s+') AS t
+      |        FROM documents) x),
+      |p AS (
+      |  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
+      |    CAST(len(list_intersect(a.ss, b.ss)) AS DOUBLE) /
+      |      CAST(len(list_distinct(list_concat(a.ss, b.ss))) AS DOUBLE) AS jaccard
+      |  FROM sh a JOIN sh b ON a.doc_id < b.doc_id)
+      |SELECT doc_a, doc_b, jaccard FROM p
+      |WHERE jaccard >= 0.8 ORDER BY doc_a, doc_b""".stripMargin
 
   private def oracleSqlBase: Map[String, String] = Map(
     // RFM segmentation: user-grain purchase aggregates, value-based
@@ -1975,8 +1822,6 @@ object SparkEntry {
         |    - e.expected_share AS deviation
         |FROM c JOIN e USING (digit) ORDER BY digit""".stripMargin,
     "w_range_join" -> rangeJoinSql,
-    // the stream-stream watermarked join accumulates the same pairs
-    "w_stream_range_join" -> rangeJoinSql,
     "w_value_deciles" ->
       """WITH e AS (SELECT event_id, event_type, value FROM events),
         |hist AS (SELECT event_type, value, COUNT(*) AS cnt
@@ -2018,8 +1863,6 @@ object SparkEntry {
         |GROUP BY GROUPING SETS ((event_type), (epoch_day), ())
         |ORDER BY lvl, event_type, epoch_day""".stripMargin,
     "w_rolling_7d" -> rolling7dSql,
-    // the streamed grid must answer identically to the batch window
-    "w_stream_rolling_7d" -> rolling7dSql,
     "g_pivot_daily" ->
       """SELECT epoch_us(ts) // 86400000000 AS epoch_day,
         |  COUNT(*) FILTER (event_type = 'click') AS click,
@@ -2278,8 +2121,6 @@ object SparkEntry {
         |  (tok_start + n_tokens - 1) // 512 - tok_start // 512 + 1 AS spans
         |FROM p ORDER BY bucket, doc_id""".stripMargin,
     "t_dataset_card" -> datasetCardSql,
-    // the streaming twin accumulates to the same composition report
-    "t_stream_dataset_card" -> datasetCardSql,
     "t_vocab_growth" ->
       """WITH tk AS (SELECT doc_id,
         |    string_split_regex(trim(text), '\s+') AS t FROM documents),
@@ -2334,11 +2175,7 @@ object SparkEntry {
         |        JOIN uni u2 ON bi.w2 = u2.token
         |ORDER BY lift DESC, bigram LIMIT 50""".stripMargin,
     "t_heavy_hitters" -> heavyHittersSql,
-    // the streaming twin accumulates to the same exact counts
-    "t_stream_heavy_hitters" -> heavyHittersSql,
     "w_anomaly_zscore" -> anomalySql,
-    // the streaming twin accumulates to the same daily grid
-    "w_stream_anomaly" -> anomalySql,
     "k_scd2_history" ->
       """WITH e AS (
         |  SELECT user_id, epoch_us(ts) AS ts_us, event_id, event_type
@@ -2515,11 +2352,7 @@ object SparkEntry {
     // unigram floor: (1.6e8*c_c)//N) so the only float is ONE
     // division of two exact Longs per doc
     "t_lm_score" -> lmScoreSql,
-    // the streaming twin accumulates to the same model + facts
-    "t_stream_lm_score" -> lmScoreSql,
     "w_active_users" -> activeUsersSql,
-    // the streamed activity set answers the same DAU/WAU report
-    "w_stream_active_users" -> activeUsersSql,
     "w_cohort_ltv" ->
       """WITH e AS (SELECT user_id, event_type, value,
         |    epoch_ns(ts) // 86400000000000 AS d FROM events),
@@ -2966,8 +2799,6 @@ object SparkEntry {
         |FROM customer JOIN orders ON c_custkey = o_custkey
         |GROUP BY 1, 2 ORDER BY c_custkey""".stripMargin,
     "pipe_corpus_clean" -> corpusCleanSql,
-    // the streaming twin accumulates to the same cleaned corpus
-    "pipe_stream_clean" -> corpusCleanSql,
     "d_embed_dedup" ->
       """WITH c AS (
         |  SELECT vec_id, embedding::DOUBLE[] AS emb, label FROM embeddings
@@ -3011,68 +2842,11 @@ object SparkEntry {
         |      CAST(COUNT(*) AS DOUBLE) AS novelty
         |FROM sh JOIN df USING (shingle)
         |GROUP BY sh.doc_id ORDER BY doc_id""".stripMargin,
-    "d_minhash_pairs" ->
-      """WITH sh AS (
-        |  SELECT doc_id, list_distinct(list_transform(
-        |    range(1, greatest(len(t) - 1, 1)),
-        |    i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2])) AS ss
-        |  FROM (SELECT doc_id, string_split_regex(trim(text), '\s+') AS t
-        |        FROM documents) x),
-        |p AS (
-        |  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-        |    CAST(len(list_intersect(a.ss, b.ss)) AS DOUBLE) /
-        |      CAST(len(list_distinct(list_concat(a.ss, b.ss))) AS DOUBLE) AS jaccard
-        |  FROM sh a JOIN sh b ON a.doc_id < b.doc_id)
-        |SELECT doc_a, doc_b, jaccard FROM p
-        |WHERE jaccard >= 0.8 ORDER BY doc_a, doc_b""".stripMargin,
-    "d_prefix_pairs" ->
-      // same exact all-pairs oracle as d_minhash_pairs: prefix
-      // filtering is exact, so the two candidate generators must
-      // converge on identical verified output
-      """WITH sh AS (
-        |  SELECT doc_id, list_distinct(list_transform(
-        |    range(1, greatest(len(t) - 1, 1)),
-        |    i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2])) AS ss
-        |  FROM (SELECT doc_id, string_split_regex(trim(text), '\s+') AS t
-        |        FROM documents) x),
-        |p AS (
-        |  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-        |    CAST(len(list_intersect(a.ss, b.ss)) AS DOUBLE) /
-        |      CAST(len(list_distinct(list_concat(a.ss, b.ss))) AS DOUBLE) AS jaccard
-        |  FROM sh a JOIN sh b ON a.doc_id < b.doc_id)
-        |SELECT doc_a, doc_b, jaccard FROM p
-        |WHERE jaccard >= 0.8 ORDER BY doc_a, doc_b""".stripMargin,
-    "d_stream_prefix" ->
-      // same exact all-pairs oracle: batch LSH, batch prefix, streamed
-      // LSH, and streamed prefix are four independent routes to one
-      // verified answer
-      """WITH sh AS (
-        |  SELECT doc_id, list_distinct(list_transform(
-        |    range(1, greatest(len(t) - 1, 1)),
-        |    i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2])) AS ss
-        |  FROM (SELECT doc_id, string_split_regex(trim(text), '\s+') AS t
-        |        FROM documents) x),
-        |p AS (
-        |  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-        |    CAST(len(list_intersect(a.ss, b.ss)) AS DOUBLE) /
-        |      CAST(len(list_distinct(list_concat(a.ss, b.ss))) AS DOUBLE) AS jaccard
-        |  FROM sh a JOIN sh b ON a.doc_id < b.doc_id)
-        |SELECT doc_a, doc_b, jaccard FROM p
-        |WHERE jaccard >= 0.8 ORDER BY doc_a, doc_b""".stripMargin,
-    "d_stream_minhash" ->
-      """WITH sh AS (
-        |  SELECT doc_id, list_distinct(list_transform(
-        |    range(1, greatest(len(t) - 1, 1)),
-        |    i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2])) AS ss
-        |  FROM (SELECT doc_id, string_split_regex(trim(text), '\s+') AS t
-        |        FROM documents) x),
-        |p AS (
-        |  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-        |    CAST(len(list_intersect(a.ss, b.ss)) AS DOUBLE) /
-        |      CAST(len(list_distinct(list_concat(a.ss, b.ss))) AS DOUBLE) AS jaccard
-        |  FROM sh a JOIN sh b ON a.doc_id < b.doc_id)
-        |SELECT doc_a, doc_b, jaccard FROM p
-        |WHERE jaccard >= 0.8 ORDER BY doc_a, doc_b""".stripMargin,
+    "d_minhash_pairs" -> allPairsJaccardSql,
+    // same exact all-pairs oracle as d_minhash_pairs: prefix filtering
+    // is exact, so the two candidate generators must converge on
+    // identical verified output
+    "d_prefix_pairs" -> allPairsJaccardSql,
     "d_ngram_pairs" ->
       """WITH cg AS (
         |  SELECT doc_id, list_distinct(list_transform(
@@ -3270,9 +3044,6 @@ object SparkEntry {
         |SELECT query_id, CAST(rk AS BIGINT) AS rank, neighbor_id, cosine
         |FROM r WHERE rk <= 3 ORDER BY query_id, rank""".stripMargin,
     "s_ann_lsh" -> annLshOracle,
-    // the streamed index must answer the probe set IDENTICALLY to the
-    // batch build — one search over two index builds, one oracle
-    "s_stream_ann_lsh" -> annLshOracle,
     // the trainer replayed exactly: seeds = 8 lowest vec_ids; two Lloyd
     // iterations, each = argmax-cosine assignment (first-max tie-break
     // = ORDER BY score DESC, cell) + quantized mean update
@@ -3345,9 +3116,6 @@ object SparkEntry {
     // duplicated iff its 8-token window occurs >= 2 times corpus-wide;
     // overlapping/adjacent duplicated windows merge into maximal spans
     "d_dup_spans" -> dupSpansSql,
-    // the streamed window index must answer the span report IDENTICALLY
-    // to the batch pass — one aggregation over two index builds
-    "d_stream_spans" -> dupSpansSql,
     "d_containment_pairs" -> containmentSql,
     // raster rebuilt from text: payload bytes truncated/zero-padded to
     // width*height (the encodePng contract); chars == bytes under the
@@ -3392,9 +3160,6 @@ object SparkEntry {
         |FROM j WHERE ha IS NULL OR hb IS NULL OR ha != hb
         |ORDER BY doc_id""".stripMargin,
     "g_retention_cohorts" -> retentionSql,
-    // the streamed activity set must answer the cohort matrix
-    // IDENTICALLY to the batch scan — one aggregation, two state builds
-    "g_stream_retention" -> retentionSql,
     // sequenced funnel: each stage's min-ts must strictly follow the
     // previous stage's min-ts (temporal order, not mere existence)
     "g_funnel_steps" ->

@@ -1,9 +1,32 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+  * plus oracle_sql.json, for the DuckDB oracle compare. A query that
+  * throws leaves a `<name>.FAILED` marker instead of its directory, and
+  * the run exits 1 once oracle_sql.json is written — a crashed query is
+  * a failed row, never a missing one. */
 object Verify {
+  /** Dump one result to `<outDir>/<name>`. The directory (and any old
+    * marker) is deleted first, so a stale result of an earlier run can
+    * never pass; when `run` throws, `<outDir>/<name>.FAILED` holds the
+    * error instead. Returns whether the dump succeeded. */
+  def dump(outDir: String, name: String, run: () => DataFrame): Boolean = {
+    val dir = new java.io.File(outDir, name)
+    val marker = Paths.get(outDir, s"$name.FAILED")
+    graft.sink.ParquetSink.delete(dir)
+    Files.deleteIfExists(marker)
+    try {
+      run().coalesce(1).write.mode("overwrite").parquet(dir.getPath)
+      true
+    } catch { case e: Throwable =>
+      System.err.println(s"[verify] $name failed: $e")
+      graft.sink.ParquetSink.delete(dir)
+      Files.writeString(marker, e.toString)
+      false
+    }
+  }
+
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir, rest @ _*) = args
     // optional extra args: restrict the dump to the named queries
@@ -25,13 +48,10 @@ object Verify {
     // itself is order-insensitive, but deterministic execution order makes
     // any order-dependent failure reproducible.
     val todo = SparkEntry.queries.toSeq.sortBy(_._1).filter(kv => only(kv._1))
-    def dump(name: String,
-        fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Unit =
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
-      }
+    val failed = new java.util.concurrent.atomic.AtomicInteger()
+    def dumpQuery(name: String,
+        fn: (SparkSession, String) => DataFrame): Unit =
+      if (!dump(outDir, name, () => fn(spark, sfDir))) failed.incrementAndGet()
     // Overlapped dumps (r18, guide §2.6 "overlap independent jobs"): at
     // the gate SF the per-query cost is dominated by DRIVER work
     // (planning + codegen + job orchestration on byte-small data), so
@@ -49,10 +69,10 @@ object Verify {
     val threads = math.max(1,
       sys.env.getOrElse("SPARK_GRAFT_VERIFY_THREADS", "4").toInt)
     todo.grouped(threads).foreach { batch =>
-      if (threads == 1 || batch.size == 1) batch.foreach(kv => dump(kv._1, kv._2))
+      if (threads == 1 || batch.size == 1) batch.foreach(kv => dumpQuery(kv._1, kv._2))
       else {
         val ts = batch.map { case (name, fn) =>
-          val t = new Thread(() => dump(name, fn), s"verify-$name")
+          val t = new Thread(() => dumpQuery(name, fn), s"verify-$name")
           t.start(); t
         }
         ts.foreach(_.join())
@@ -79,5 +99,9 @@ object Verify {
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()
+    if (failed.get > 0) {
+      System.err.println(s"[verify] ${failed.get} queries failed")
+      sys.exit(1)
+    }
   }
 }

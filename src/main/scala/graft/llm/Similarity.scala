@@ -126,7 +126,7 @@ object Similarity {
   /** The census body of [[sDecontaminate]] over ANY normalized corpus
     * relation (vec_id, emb, nrm) — shared by the batch query and the
     * streamed-index twin
-    * ([[graft.streaming.StreamingAnnIndex.sStreamDecontaminate]]), so
+    * ([[graft.streaming.StreamingAnnIndex.decontaminate]]), so
     * continuous decontamination over the accumulated index cannot
     * drift from the snapshot report. */
   private[graft] def decontaminateRel(e: DataFrame, nProbes: Int,
@@ -473,7 +473,7 @@ object Similarity {
   /** Multi-probe search over an ASSIGNED (vec_id, emb, nrm, cell)
     * index relation — shared by the batch query (which assigns inline)
     * and the streamed index MV
-    * ([[graft.streaming.StreamingAnnIndex.sStreamAnnKmeans]]), the
+    * ([[graft.streaming.StreamingAnnIndex.kmeans]]), the
     * [[annLshSearch]] discipline: one search implementation over two
     * index builds. */
   private[graft] def kmeansSearchIndexed(assigned: DataFrame,
@@ -1113,7 +1113,7 @@ object Similarity {
     * cell assignment ([[withCell]]'s expression) plus the cosine to
     * that own centroid. Computed inline by the batch query and
     * per-micro-batch by the streaming twin
-    * ([[graft.streaming.StreamingAnnIndex.sStreamPrune]]) — facts
+    * ([[graft.streaming.StreamingAnnIndex.prune]]) — facts
     * arrive once per vector and never change (PK-FINAL shape). */
   private[graft] def assignWithProto(e: DataFrame,
       cents: Array[Array[Double]]): DataFrame =

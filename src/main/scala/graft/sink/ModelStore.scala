@@ -23,6 +23,8 @@ import org.apache.spark.sql.functions._
   * Model families and their tables (all under one store root):
   *  - `kmeans`: (model_id, cell, centroid array<double>) — the IVF
   *    coarse quantizer, k·d doubles, driver-bounded by construction.
+  *  - `lsh`: (model_id, plane, normal array<double>) — the sign-bucket
+  *    index's hyperplane set, nPlanes·d doubles.
   *  - `pq`: (model_id, subspace, code, centroid array<double>) — the
   *    per-subspace PQ codebooks, m·ksub·dsub doubles.
   *  - `bpe`: (model_id, merge_step, left_sym, right_sym, pair_count) —
@@ -55,26 +57,49 @@ object ModelStore {
       ParquetSink.readAsOf(raw, pk, v))
   }
 
-  // ------------------------------------------------------------ kmeans
+  // ------------------------------------------------- kmeans / lsh
 
-  def saveKmeans(spark: SparkSession, root: String, modelId: String,
-      version: Long, centroids: Array[Array[Double]]): Unit = {
+  /** A model that is an ordered vector list: `(model_id, idx, vec)`
+    * rows in table `family`, keyed on `(model_id, idx)`. */
+  private def saveVectors(spark: SparkSession, root: String, family: String,
+      idx: String, vec: String, modelId: String, version: Long,
+      vs: Array[Array[Double]]): Unit = {
     import spark.implicits._
-    save(centroids.toIndexedSeq.zipWithIndex
-      .map { case (c, i) => (modelId, i, c.toIndexedSeq) }
-      .toDF("model_id", "cell", "centroid"),
-      s"$root/kmeans", version, Seq("model_id", "cell"))
+    save(vs.toIndexedSeq.zipWithIndex
+      .map { case (v, i) => (modelId, i, v.toIndexedSeq) }
+      .toDF("model_id", idx, vec),
+      s"$root/$family", version, Seq("model_id", idx))
   }
 
-  def loadKmeans(spark: SparkSession, root: String, modelId: String,
-      asOfVersion: Option[Long] = None): Array[Array[Double]] = {
-    val rows = loadLatest(spark, s"$root/kmeans", modelId,
-      Seq("model_id", "cell"), asOfVersion)
-      .orderBy(col("cell"))
-      .select(col("centroid")).collect()
-    require(rows.nonEmpty, s"model store: no kmeans model '$modelId'")
+  private def loadVectors(spark: SparkSession, root: String, family: String,
+      idx: String, vec: String, modelId: String,
+      asOfVersion: Option[Long]): Array[Array[Double]] = {
+    val rows = loadLatest(spark, s"$root/$family", modelId,
+      Seq("model_id", idx), asOfVersion)
+      .orderBy(col(idx))
+      .select(col(vec)).collect()
+    require(rows.nonEmpty, s"model store: no $family model '$modelId'")
     rows.map(_.getSeq[Double](0).toArray)
   }
+
+  def saveKmeans(spark: SparkSession, root: String, modelId: String,
+      version: Long, centroids: Array[Array[Double]]): Unit =
+    saveVectors(spark, root, "kmeans", "cell", "centroid", modelId, version,
+      centroids)
+
+  def loadKmeans(spark: SparkSession, root: String, modelId: String,
+      asOfVersion: Option[Long] = None): Array[Array[Double]] =
+    loadVectors(spark, root, "kmeans", "cell", "centroid", modelId,
+      asOfVersion)
+
+  def saveLshPlanes(spark: SparkSession, root: String, modelId: String,
+      version: Long, planes: Array[Array[Double]]): Unit =
+    saveVectors(spark, root, "lsh", "plane", "normal", modelId, version,
+      planes)
+
+  def loadLshPlanes(spark: SparkSession, root: String, modelId: String,
+      asOfVersion: Option[Long] = None): Array[Array[Double]] =
+    loadVectors(spark, root, "lsh", "plane", "normal", modelId, asOfVersion)
 
   // ---------------------------------------------------------------- pq
 

@@ -477,28 +477,33 @@ object ParquetSink {
     f.delete(): Unit
   }
 
-  /** Per-JVM scratch dir for sink-scenario queries and streaming-twin
-    * feeds/warehouses: `tmpdir/graft_sink_<pid>_<name>`, emptied on
-    * entry and deleted at JVM exit.
+  /** A fresh scratch dir for one invocation of a sink-scenario query or
+    * streaming twin: `tmpdir/graft_sink_<pid>_<name>_<n>`, where `n`
+    * is a process-wide counter — every call returns a NEW directory —
+    * emptied on entry and deleted at JVM exit.
     *
-    * The pid component is LOAD-BEARING: these paths used to be fixed
-    * (`graft_sink_<name>`), so two JVMs running the same declared query
-    * concurrently — a background Verify replay beside the test suite —
-    * fed each other's streams and the suite read ~100× inflated MV
-    * state (round-16 incident: `w_stream_rolling_7d` at sf0.001 read
-    * the sf0.1 replay's feed). Same failure class as the "no
-    * concurrent sbt" rule; the unique path removes the hazard instead
-    * of ruling it away. */
+    * Both components are LOAD-BEARING. The pid: fixed paths let two
+    * JVMs running the same declared query concurrently (a background
+    * Verify replay beside the test suite) feed each other's streams —
+    * the suite read ~100× inflated MV state (round-16 incident:
+    * `w_stream_rolling_7d` at sf0.001 read the sf0.1 replay's feed).
+    * The counter: pid + name alone let two queries of one JVM that
+    * named the same dir (the dedup and graph twins shared theirs)
+    * delete each other's live stream under the parallel Verify, which
+    * silently dropped `d_stream_minhash` and `g_stream_components` from
+    * the round-18 gate; a lazily-held result read after a sibling ran
+    * failed the same way. */
   def scratchDir(name: String): String = {
     val d = new java.io.File(
       System.getProperty("java.io.tmpdir"),
-      s"graft_sink_${ProcessHandle.current().pid()}_$name")
+      s"graft_sink_${ProcessHandle.current().pid()}_${name}_" +
+        scratchSeq.incrementAndGet())
     delete(d)
-    // ONE shutdown hook for all scratch names (ADVICE r16): a
-    // per-name hook accumulates threads in a long-lived process
-    // cycling many names, and registering DURING shutdown throws
-    // IllegalStateException — swallow that case (the JVM is exiting;
-    // the cleanup the hook would do is happening anyway).
+    // ONE shutdown hook for all scratch dirs (ADVICE r16): a per-dir
+    // hook accumulates threads in a long-lived process, and registering
+    // DURING shutdown throws IllegalStateException — swallow that case
+    // (the JVM is exiting; the cleanup the hook would do is happening
+    // anyway).
     if (scratchHookArmed.compareAndSet(false, true)) {
       try Runtime.getRuntime.addShutdownHook(new Thread(() =>
         scratchRegistered.keySet().forEach(p =>
@@ -508,6 +513,7 @@ object ParquetSink {
     scratchRegistered.put(d.getAbsolutePath, java.lang.Boolean.TRUE): Unit
     d.getAbsolutePath
   }
+  private val scratchSeq = new java.util.concurrent.atomic.AtomicLong()
   private val scratchHookArmed =
     new java.util.concurrent.atomic.AtomicBoolean(false)
   private val scratchRegistered =

@@ -2,9 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
-import org.apache.spark.sql.types.{DoubleType, LongType, StringType,
-  StructField, StructType}
 import graft.sink.ParquetSink
 
 /** Incremental ANOMALY detection: the (event_type, epoch_day) daily
@@ -27,94 +24,41 @@ import graft.sink.ParquetSink
 object StreamingAnomaly {
 
   private val NanosPerDay = 86400L * 1000000000L
-  private val eventSchema = StructType(Seq(
-    StructField("doc_id", LongType), // event_id; the feed writer keys on doc_id
-    StructField("ts", LongType), // epoch nanos (feed carries the normalized Long)
-    StructField("event_type", StringType),
-    StructField("value", DoubleType)))
   private val keys = Seq("event_type", "epoch_day")
   private val sums = Seq("day_count")
 
-  /** Drain every unseen chunk file (Trigger.AvailableNow, resumable
-    * checkpoint), folding each micro-batch into the daily count grid. */
-  def runStream(spark: SparkSession, feedDir: String,
-      warehouse: String): Unit = {
-    val gridPath = s"$warehouse/anomaly_summed"
-    val query = StreamingDedup.readDocStream(spark, feedDir, eventSchema)
-      .writeStream
-      .option("checkpointLocation", s"$warehouse/_anomaly_checkpoint")
-      .foreachBatch { (b: DataFrame, _: Long) =>
-        val batch = b.localCheckpoint()
-        if (!batch.isEmpty) {
-          val maxId = batch.agg(max(col("doc_id"))).collect()(0).getLong(0)
-          val partial = batch
-            .withColumn("epoch_day", expr(s"ts DIV ${NanosPerDay}L"))
-            .groupBy(col("event_type"), col("epoch_day"))
-            .agg(count(lit(1)).as("day_count"))
-            .withColumn("block_height", col("epoch_day"))
-          ParquetSink.writeSummedBatch(partial, gridPath, maxId, keys)
-        }
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    query.awaitTermination()
-  }
+  /** Fold each micro-batch into the daily count grid. */
+  private val fold: StreamTwin.Fold =
+    (_, warehouse) => (batch, maxId) => {
+      val partial = batch
+        .withColumn("epoch_day", expr(s"ts DIV ${NanosPerDay}L"))
+        .groupBy(col("event_type"), col("epoch_day"))
+        .agg(count(lit(1)).as("day_count"))
+        .withColumn("block_height", col("epoch_day"))
+      ParquetSink.writeSummedBatch(partial, s"$warehouse/anomaly_summed",
+        maxId, keys)
+    }
 
-  /** Declared query (`w_stream_anomaly`): stream the events table
-    * through the incremental grid — two chunks, a mid-stream restart
-    * from the same checkpoint (only unseen chunks replay), a compaction
-    * MERGE between the two runs — then the shared integer-exact 2σ
-    * detector over the summed grid. Equals the batch
-    * [[graft.queries.EventQueries.wAnomalyZscore]] and shares its
-    * oracle. Correctness-only: its cost is micro-batch orchestration,
-    * not data volume. */
-  def wStreamAnomaly(spark: SparkSession, dir: String,
-      nChunks: Int = 5): DataFrame =
-    graft.queries.EventQueries.anomalyFromDaily(
-      streamedGrid(spark, dir, "anomaly", nChunks))
+  /** The daily grid twin: a compaction MERGE between the waves, then
+    * `detect` over the accumulated summed grid. */
+  private def gridTwin(name: String, batch: String,
+      detect: DataFrame => DataFrame): Twin =
+    Twin(name, batch, StreamingEventLog.eventSchema, StreamingEventLog.events,
+      fold,
+      (spark, wh) => detect(ParquetSink.readSummed(
+        spark.read.parquet(s"$wh/anomaly_summed"), keys, sums)
+        .select(col("event_type"), col("epoch_day"), col("day_count"))),
+      between = (spark, wh) =>
+        ParquetSink.compactSummed(spark, s"$wh/anomaly_summed", keys, sums))
 
-  /** Declared query (`w_stream_anomaly_mad`): the ROBUST detector over
-    * the SAME incrementally-summed daily grid — the median/MAD read is
-    * not additive (a new day can move both medians), but its input
-    * grid is, so the MV is shared-shape with the z-score twin and the
-    * detection runs at read through THE shared
-    * [[graft.queries.EventQueries.madFromDaily]]. Equals the batch
-    * `w_anomaly_mad` and shares its oracle. */
-  def wStreamAnomalyMad(spark: SparkSession, dir: String,
-      nChunks: Int = 5): DataFrame =
-    graft.queries.EventQueries.madFromDaily(
-      streamedGrid(spark, dir, "anomaly_mad", nChunks))
+  /** `w_stream_anomaly`: the shared integer-exact 2σ detector. */
+  val zscore: Twin = gridTwin("w_stream_anomaly", "w_anomaly_zscore",
+    graft.queries.EventQueries.anomalyFromDaily)
 
-  /** Stream the events table into the daily-count summing MV (two
-    * chunks, mid-stream restart from the same checkpoint, a compaction
-    * MERGE between runs) and return the accumulated grid — shared by
-    * both anomaly twins. */
-  private def streamedGrid(spark: SparkSession, dir: String, tag: String,
-      nChunks: Int): DataFrame = {
-    graft.Tables.tune(spark)
-    val feed = StreamingDedup.freshDir(s"${tag}_feed")
-    val warehouse = StreamingDedup.freshDir(s"${tag}_wh")
-    val evs = graft.Tables.events(spark, dir)
-      .select(col("event_id").as("doc_id"), col("ts"), col("event_type"),
-        col("value"))
-    StreamingDedup.writeDocChunks(spark, evs, feed, nChunks,
-      takeChunks = 2, schema = eventSchema)
-    runStream(spark, feed, warehouse)
-    ParquetSink.compactSummed(spark, s"$warehouse/anomaly_summed", keys, sums)
-    StreamingDedup.writeDocChunks(spark, evs, feed, nChunks,
-      schema = eventSchema)
-    runStream(spark, feed, warehouse)
-    ParquetSink.readSummed(
-      spark.read.parquet(s"$warehouse/anomaly_summed"), keys, sums)
-      .select(col("event_type"), col("epoch_day"), col("day_count"))
-  }
-
-  /** The shared-detector read over the accumulated summed grid —
-    * shared by the declared query and the randomized soak. */
-  def readAnomalies(spark: SparkSession, warehouse: String): DataFrame = {
-    val grid = ParquetSink.readSummed(
-      spark.read.parquet(s"$warehouse/anomaly_summed"), keys, sums)
-      .select(col("event_type"), col("epoch_day"), col("day_count"))
-    graft.queries.EventQueries.anomalyFromDaily(grid)
-  }
+  /** `w_stream_anomaly_mad`: the ROBUST detector over the SAME grid —
+    * the median/MAD read is not additive (a new day can move both
+    * medians), but its input grid is, so the detection runs at read
+    * through THE shared [[graft.queries.EventQueries.madFromDaily]]. */
+  val mad: Twin = gridTwin("w_stream_anomaly_mad", "w_anomaly_mad",
+    graft.queries.EventQueries.madFromDaily)
 }

@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types.{LongType, StringType, StructType}
 import graft.llm.CorpusPipeline
 import graft.sink.ParquetSink
@@ -71,71 +70,54 @@ object StreamingCorpusClean {
       newBands, pairs, cached)
   }
 
-  /** Drain every unseen chunk file (Trigger.AvailableNow, resumable
-    * checkpoint — same contract as [[StreamingDedup.runStream]]). */
-  def runStream(spark: SparkSession, feedDir: String,
-      warehouse: String): Unit = {
-    val docsPath = s"$warehouse/clean_docs"
-    val hashPath = s"$warehouse/clean_hashes"
-    val bandsPath = s"$warehouse/clean_bands"
-    val pairsPath = s"$warehouse/clean_pairs"
-    def tableOr(path: String, empty: => DataFrame): DataFrame =
-      if (ParquetSink.hasData(path)) spark.read.parquet(path) else empty
-    import spark.implicits._
-    val query = StreamingDedup.readDocStream(spark, feedDir, feedSchema)
-      .writeStream
-      .option("checkpointLocation", s"$warehouse/_clean_checkpoint")
-      .foreachBatch { (b: DataFrame, _: Long) =>
-        val batch = b.localCheckpoint()
-        if (!batch.isEmpty) {
-          val maxId = batch.agg(max(col("doc_id"))).collect()(0).getLong(0)
-          // hash/canon state resolve through FINAL like
-          // StreamingDedup.runStream's allDocs: after a crash-replay the
-          // raw files hold duplicate rows per PK, and raw reads would
-          // multiply the anti-join/verify inputs (ADVICE r5). Band state
-          // stays raw: replayed band rows are identical and the
-          // candidate join ends in distinct().
-          val hashState = if (ParquetSink.hasData(hashPath))
-            ParquetSink.readFinal(spark.read.parquet(hashPath), hashPk)
-          else Seq.empty[(String, Long)].toDF("norm_hash", "doc_id")
-          val bandState = tableOr(bandsPath,
-            Seq.empty[(Long, Int, Long)].toDF("doc_id", "band", "bucket"))
-          val canonDocs = (if (ParquetSink.hasData(docsPath))
-            ParquetSink.readFinal(spark.read.parquet(docsPath), docsPk)
-          else Seq.empty[(Long, String)].toDF("doc_id", "text"))
-            .select("doc_id", "text")
-          val (canon, hashRows, newBands, pairs, cached) =
-            processBatch(batch, hashState, bandState, canonDocs)
-          // write order per the object scaladoc: docs, pairs, bands,
-          // hash state LAST (the replay barrier)
-          ParquetSink.writeBatch(
-            canon.select(col("doc_id"), col("lang"), col("lang_guess"),
-              col("n_tokens"), col("quality"), col("text"))
-              .withColumn("block_height", col("doc_id")),
-            docsPath, maxId, docsPk)
-          ParquetSink.writeBatch(
-            pairs.withColumn("block_height", col("doc_b")),
-            pairsPath, maxId, StreamingDedup.pairsPk)
-          ParquetSink.writeBatch(
-            newBands.withColumn("block_height", col("doc_id")),
-            bandsPath, maxId, Seq("doc_id", "band"))
-          ParquetSink.writeBatch(
-            hashRows.withColumn("block_height", col("doc_id")),
-            hashPath, maxId, hashPk)
-          // drop EXACTLY this batch's verify-stage persists (see
-          // StreamingDedup.runStream for the leak + scoping rationale)
-          cached.foreach(_.unpersist())
-        }
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    query.awaitTermination()
-  }
+  /** The cleaning MV fold, write order per the object scaladoc. */
+  private val fold: StreamTwin.Fold =
+    (spark, warehouse) => (batch, maxId) => {
+      import spark.implicits._
+      val docsPath = s"$warehouse/clean_docs"
+      val hashPath = s"$warehouse/clean_hashes"
+      val bandsPath = s"$warehouse/clean_bands"
+      // hash/canon state resolve through FINAL like the dedup twin's
+      // allDocs: after a crash-replay the raw files hold duplicate rows
+      // per PK, and raw reads would multiply the anti-join/verify inputs
+      // (ADVICE r5). Band state stays raw: replayed band rows are
+      // identical and the candidate join ends in distinct().
+      val hashState = if (ParquetSink.hasData(hashPath))
+        ParquetSink.readFinal(spark.read.parquet(hashPath), hashPk)
+      else Seq.empty[(String, Long)].toDF("norm_hash", "doc_id")
+      val bandState = if (ParquetSink.hasData(bandsPath))
+        spark.read.parquet(bandsPath)
+      else Seq.empty[(Long, Int, Long)].toDF("doc_id", "band", "bucket")
+      val canonDocs = (if (ParquetSink.hasData(docsPath))
+        ParquetSink.readFinal(spark.read.parquet(docsPath), docsPk)
+      else Seq.empty[(Long, String)].toDF("doc_id", "text"))
+        .select("doc_id", "text")
+      val (canon, hashRows, newBands, pairs, cached) =
+        processBatch(batch, hashState, bandState, canonDocs)
+      // docs, pairs, bands, hash state LAST (the replay barrier)
+      ParquetSink.writeBatch(
+        canon.select(col("doc_id"), col("lang"), col("lang_guess"),
+          col("n_tokens"), col("quality"), col("text"))
+          .withColumn("block_height", col("doc_id")),
+        docsPath, maxId, docsPk)
+      ParquetSink.writeBatch(
+        pairs.withColumn("block_height", col("doc_b")),
+        s"$warehouse/clean_pairs", maxId, StreamingDedup.pairsPk)
+      ParquetSink.writeBatch(
+        newBands.withColumn("block_height", col("doc_id")),
+        bandsPath, maxId, Seq("doc_id", "band"))
+      ParquetSink.writeBatch(
+        hashRows.withColumn("block_height", col("doc_id")),
+        hashPath, maxId, hashPk)
+      // drop EXACTLY this batch's verify-stage persists (see the dedup
+      // twin's fold for the leak + scoping rationale)
+      cached.foreach(_.unpersist())
+    }
 
   /** The cleaned-corpus read surface: accumulated canon docs minus the
     * larger id of every verified near-dup pair — the same projection
     * and drop policy as the batch pipeline's output. */
-  def cleanedTable(spark: SparkSession, warehouse: String): DataFrame = {
+  private def cleanedTable(spark: SparkSession, warehouse: String): DataFrame = {
     val docs = ParquetSink.readFinal(
       spark.read.parquet(s"$warehouse/clean_docs"), docsPk)
     val drops =
@@ -154,28 +136,16 @@ object StreamingCorpusClean {
       .orderBy(col("doc_id"))
   }
 
-  /** Declared query (`pipe_stream_clean`): stream the re-ingested
-    * corpus (base ∪ shifted-id twin — originals arrive first in the
-    * id-ordered feed, so canon survivors match the batch min-id
-    * policy) through the REAL cleaning stream: checkpointed file
-    * source, two chunks, a stop, then the rest against the same
-    * checkpoint (mid-stream restart). Oracle: identical to
-    * `pipe_corpus_clean`. Correctness-only, like `d_stream_minhash`. */
-  def pipeStreamClean(spark: SparkSession, dir: String,
-      nChunks: Int = 5): DataFrame = {
-    graft.Tables.tune(spark)
-    val feed = StreamingDedup.freshDir("clean_feed")
-    val warehouse = StreamingDedup.freshDir("clean_wh")
-    val base = graft.Tables.documents(spark, dir)
-      .select(col("doc_id"), col("lang"), col("text"))
-    val corpus = base.unionByName(
-      base.withColumn("doc_id", col("doc_id") + lit(100000L)))
-    StreamingDedup.writeDocChunks(spark, corpus, feed, nChunks,
-      takeChunks = 2, schema = feedSchema)
-    runStream(spark, feed, warehouse)
-    StreamingDedup.writeDocChunks(spark, corpus, feed, nChunks,
-      schema = feedSchema)
-    runStream(spark, feed, warehouse)
-    cleanedTable(spark, warehouse)
-  }
+  /** `pipe_stream_clean`: the re-ingested corpus (base ∪ shifted-id
+    * twin — originals arrive first in the id-ordered feed, so canon
+    * survivors match the batch min-id policy) through the cleaning
+    * stream. */
+  val clean: Twin = Twin("pipe_stream_clean", "pipe_corpus_clean",
+    feedSchema,
+    (spark, dir) => {
+      val base = graft.Tables.documents(spark, dir)
+        .select(col("doc_id"), col("lang"), col("text"))
+      base.unionByName(base.withColumn("doc_id", col("doc_id") + lit(100000L)))
+    },
+    fold, cleanedTable)
 }

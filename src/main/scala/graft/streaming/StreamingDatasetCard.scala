@@ -1,8 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 import graft.sink.ParquetSink
 import graft.llm.TextAnalysis
@@ -33,64 +31,38 @@ object StreamingDatasetCard {
   private val keys = Seq("split", "lang")
   private val sums = Seq("n_docs", "total_tokens")
 
-  /** Drain every unseen chunk file (Trigger.AvailableNow, resumable
-    * checkpoint), folding each micro-batch into the summing table. */
-  def runStream(spark: SparkSession, feedDir: String,
-      warehouse: String): Unit = {
-    val cardPath = s"$warehouse/card_summed"
-    val query = StreamingDedup.readDocStream(spark, feedDir, cardSchema)
-      .writeStream
-      .option("checkpointLocation", s"$warehouse/_card_checkpoint")
-      .foreachBatch { (b: DataFrame, _: Long) =>
-        val batch = b.localCheckpoint()
-        if (!batch.isEmpty) {
-          val maxId = batch.agg(max(col("doc_id"))).collect()(0).getLong(0)
-          val partial = TextAnalysis.withSplit(batch)
-            .withColumn("n_tokens",
-              size(TextAnalysis.tokens(col("text"))).cast("long"))
-            .groupBy(col("split"), col("lang"))
-            .agg(count(lit(1)).as("n_docs"),
-              sum(col("n_tokens")).as("total_tokens"))
-            .withColumn("block_height", lit(maxId))
-          ParquetSink.writeSummedBatch(partial, cardPath, maxId, keys)
-        }
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    query.awaitTermination()
-  }
-
-  /** Declared query (`t_stream_dataset_card`): stream the documents
-    * table through the incremental card — two chunks, a mid-stream
-    * restart from the same checkpoint (only unseen chunks replay), a
-    * compaction MERGE between the two runs (later partials must stay
-    * above the merge watermark) — then read the summed table and attach
-    * token shares. Equals the batch [[TextAnalysis.tDatasetCard]], and
-    * shares its oracle. Correctness-only: its cost is micro-batch
-    * orchestration, not data volume. */
-  def tStreamDatasetCard(spark: SparkSession, dir: String,
-      nChunks: Int = 5): DataFrame = {
-    graft.Tables.tune(spark)
-    val feed = StreamingDedup.freshDir("card_feed")
-    val warehouse = StreamingDedup.freshDir("card_wh")
-    val docs = graft.Tables.documents(spark, dir)
-      .select(col("doc_id"), col("text"), col("lang"))
-    StreamingDedup.writeDocChunks(spark, docs, feed, nChunks,
-      takeChunks = 2, schema = cardSchema)
-    runStream(spark, feed, warehouse)
-    ParquetSink.compactSummed(spark, s"$warehouse/card_summed", keys, sums)
-    StreamingDedup.writeDocChunks(spark, docs, feed, nChunks,
-      schema = cardSchema)
-    runStream(spark, feed, warehouse)
-    val summed = ParquetSink.readSummed(
-      spark.read.parquet(s"$warehouse/card_summed"), keys, sums)
-    val totals = summed.groupBy(col("split"))
-      .agg(sum(col("total_tokens")).as("split_tokens"))
-    summed.join(broadcast(totals), Seq("split"))
-      .withColumn("token_share",
-        col("total_tokens").cast("double") / col("split_tokens").cast("double"))
-      .select(col("split"), col("lang"), col("n_docs"), col("total_tokens"),
-        col("token_share"))
-      .orderBy(col("split"), col("lang"))
-  }
+  /** `t_stream_dataset_card`: each micro-batch folds to one tiny
+    * (split, lang) partial in the summing table; a compaction MERGE
+    * runs between the waves (later partials must stay above the merge
+    * watermark), and the read attaches token shares to the summed
+    * card. */
+  val card: Twin = Twin("t_stream_dataset_card", "t_dataset_card",
+    cardSchema,
+    (spark, dir) => graft.Tables.documents(spark, dir)
+      .select(col("doc_id"), col("text"), col("lang")),
+    (_, warehouse) => (batch, maxId) => {
+      val partial = TextAnalysis.withSplit(batch)
+        .withColumn("n_tokens",
+          size(TextAnalysis.tokens(col("text"))).cast("long"))
+        .groupBy(col("split"), col("lang"))
+        .agg(count(lit(1)).as("n_docs"),
+          sum(col("n_tokens")).as("total_tokens"))
+        .withColumn("block_height", lit(maxId))
+      ParquetSink.writeSummedBatch(partial, s"$warehouse/card_summed",
+        maxId, keys)
+    },
+    (spark, warehouse) => {
+      val summed = ParquetSink.readSummed(
+        spark.read.parquet(s"$warehouse/card_summed"), keys, sums)
+      val totals = summed.groupBy(col("split"))
+        .agg(sum(col("total_tokens")).as("split_tokens"))
+      summed.join(broadcast(totals), Seq("split"))
+        .withColumn("token_share", col("total_tokens").cast("double") /
+          col("split_tokens").cast("double"))
+        .select(col("split"), col("lang"), col("n_docs"),
+          col("total_tokens"), col("token_share"))
+        .orderBy(col("split"), col("lang"))
+    },
+    between = (spark, wh) =>
+      ParquetSink.compactSummed(spark, s"$wh/card_summed", keys, sums))
 }

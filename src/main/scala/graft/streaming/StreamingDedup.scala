@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types.{LongType, StringType, StructType}
 import graft.llm.Dedup
 import graft.sink.ParquetSink
@@ -47,99 +46,14 @@ object StreamingDedup {
   val docSchema: StructType = new StructType()
     .add("doc_id", LongType).add("text", StringType)
 
-  /** Persist a documents relation as chunked JSON-lines files — the
-    * arrival feed for the file-stream source, one chunk per
-    * micro-batch. Mtimes are stamped from each chunk's first doc_id
-    * (Spark's file source orders by MODIFICATION TIME, and stamping
-    * from content keeps re-writes and later arrivals monotonic — the
-    * BlockFileSource lesson). Chunk boundaries are a pure function of
-    * (corpus, nChunks), so writing `takeChunks = 2` now and the full
-    * feed later produces byte-identical early files — the checkpoint
-    * recognizes them as consumed and resumes at the first unseen chunk
-    * (the mid-stream-arrival case).
-    *
-    * DISTRIBUTED: the corpus never collects to the driver (VERDICT r5
-    * #3 — the old single-collect shape was a driver OOM at real
-    * scale). Global ranks come from range-repartition + per-partition
-    * sort + `zipWithIndex` (one tiny count-per-partition job — the
-    * classic offset pattern); rows then hash-shuffle on their CHUNK id
-    * and each executor writes its chunks' files directly, rows already
-    * (chunk, rank)-sorted. Driver state: the total count and one task
-    * per chunk file — both bounded by nChunks, not the corpus. */
-  def writeDocChunks(spark: SparkSession, docs: DataFrame, dir: String,
-      nChunks: Int, takeChunks: Int = Int.MaxValue,
-      schema: StructType = docSchema): Unit = {
-    new java.io.File(dir).mkdirs()
-    val cols = schema.fieldNames.toSeq
-    val total = docs.count()
-    val per = math.max(1L, (total + nChunks - 1) / nChunks)
-    val ordered = docs
-      .select(to_json(struct(cols.map(col): _*)).as("j"), col("doc_id"))
-      .repartitionByRange(col("doc_id"))
-      .sortWithinPartitions(col("doc_id"))
-    val take = takeChunks.toLong
-    val session = docs.sparkSession
-    import session.implicits._
-    val chunked = ordered.rdd.zipWithIndex()
-      .flatMap { case (r, i) =>
-        val c = i / per
-        if (c < take) Some((c, i, r.getString(0), r.getLong(1))) else None
-      }
-      .toDF("chunk", "rank", "j", "doc_id")
-    val dirStr = dir
-    chunked
-      .repartition(math.min(nChunks, 32), col("chunk"))
-      .sortWithinPartitions(col("chunk"), col("rank"))
-      .foreachPartition { (it: Iterator[org.apache.spark.sql.Row]) =>
-        // rows arrive (chunk, rank)-sorted; a partition may hold several
-        // whole chunks — write each as one file, named and mtime-stamped
-        // from its first doc_id
-        val grouped = new Iterator[Seq[org.apache.spark.sql.Row]] {
-          val buf = it.buffered
-          def hasNext: Boolean = buf.hasNext
-          def next(): Seq[org.apache.spark.sql.Row] = {
-            val c = buf.head.getLong(0)
-            val out = Seq.newBuilder[org.apache.spark.sql.Row]
-            while (buf.hasNext && buf.head.getLong(0) == c) out += buf.next()
-            out.result()
-          }
-        }
-        grouped.foreach { chunk =>
-          val firstId = chunk.head.getLong(3)
-          val json = chunk.map(_.getString(2)).mkString("", "\n", "\n")
-          val p = java.nio.file.Paths.get(dirStr, f"docs_$firstId%012d.json")
-          java.nio.file.Files.writeString(p, json)
-          p.toFile.setLastModified(1600000000000L + firstId * 1000L): Unit
-        }
-      }
-  }
-
-  /** Streaming read of a document feed: one chunk file per micro-batch,
-    * in doc_id order (mtime-stamped by [[writeDocChunks]]). */
-  def readDocStream(spark: SparkSession, dir: String,
-      schema: StructType = docSchema): DataFrame =
-    spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1)
-      .json(dir)
-
   /** One micro-batch fold (pure — shared by the streaming query and
-    * any batch replayer): emit verified near-dup pairs whose LATER doc
-    * is in `newDocs`, against `stateBands` (history's band rows) and
-    * `allDocs` (accumulated documents INCLUDING this batch).
-    * Returns (this batch's band rows, verified pairs). */
-  def processBatch(newDocs: DataFrame, stateBands: DataFrame,
-      allDocs: DataFrame,
-      gramHashes: String = "token_shingle_hashes(text, 3)",
-      threshold: Double = 0.8): (DataFrame, DataFrame) = {
-    val (bands, pairs, _) =
-      processBatchTracked(newDocs, stateBands, allDocs, gramHashes, threshold)
-    (bands, pairs)
-  }
-
-  /** [[processBatch]] plus the DataFrames the verify stage persisted,
-    * so the stream can unpersist EXACTLY those after the batch's writes
-    * (a session-wide `clearCache()` would also drop caller-held caches
-    * — ADVICE r5). */
+    * any batch replayer): verified near-dup pairs whose LATER doc is in
+    * `newDocs`, against `stateBands` (history's band rows) and
+    * `allDocs` (accumulated documents INCLUDING this batch). Returns
+    * (this batch's band rows, verified pairs, the DataFrames the verify
+    * stage persisted — the caller unpersists EXACTLY those after its
+    * writes; a session-wide `clearCache()` would also drop caller-held
+    * caches, ADVICE r5). */
   def processBatchTracked(newDocs: DataFrame, stateBands: DataFrame,
       allDocs: DataFrame,
       gramHashes: String = "token_shingle_hashes(text, 3)",
@@ -165,131 +79,74 @@ object StreamingDedup {
     (newBands, pairs, cached)
   }
 
-  /** Run the streaming dedup over every chunk file the checkpoint has
-    * not consumed yet, then stop (Trigger.AvailableNow — same resume
-    * contract as [[StreamRunner.runStream]]: call again after new
-    * chunks land and the SAME checkpoint continues from the first
-    * unseen file).
-    *
-    * Warehouse tables: `dedup_docs` (the accumulated corpus),
-    * `dedup_bands` (LSH state), `dedup_pairs` (verified output,
-    * PK (doc_a, doc_b)). Write order per batch: docs → pairs → bands
-    * last, so a crash anywhere replays the batch against a band table
-    * that has not seen it; every table self-heals through FINAL. */
-  def runStream(spark: SparkSession, docsDir: String, warehouse: String,
-      gramHashes: String = "token_shingle_hashes(text, 3)",
-      threshold: Double = 0.8): Unit = {
-    val docsPath = s"$warehouse/dedup_docs"
-    val bandsPath = s"$warehouse/dedup_bands"
-    val pairsPath = s"$warehouse/dedup_pairs"
-    val query = readDocStream(spark, docsDir)
-      .writeStream
-      .option("checkpointLocation", s"$warehouse/_dedup_checkpoint")
-      .foreachBatch { (b: DataFrame, _: Long) =>
-        val batch = b.localCheckpoint()
-        if (!batch.isEmpty) {
-          val maxId = batch.agg(max(col("doc_id"))).collect()(0).getLong(0)
-          // corpus first: the verify stage below must see this batch
-          ParquetSink.writeBatch(
-            batch.withColumn("block_height", col("doc_id")),
-            docsPath, maxId, Seq("doc_id"))
-          val allDocs = ParquetSink.readFinal(
-            spark.read.parquet(docsPath), Seq("doc_id"))
-            .select("doc_id", "text")
-          val state =
-            if (ParquetSink.hasData(bandsPath))
-              spark.read.parquet(bandsPath)
-            else emptyBands(spark)
-          val (newBands, pairs, cached) =
-            processBatchTracked(batch, state, allDocs, gramHashes, threshold)
-          ParquetSink.writeBatch(
-            pairs.withColumn("block_height", col("doc_b")),
-            pairsPath, maxId, pairsPk)
-          // band state commits last (see scaladoc). Replayed band rows
-          // are identical (deterministic signatures) — FINAL-safe.
-          ParquetSink.writeBatch(
-            newBands.withColumn("block_height", col("doc_id")),
-            bandsPath, maxId, Seq("doc_id", "band"))
-          // the verify stage persists per batch; drop EXACTLY those
-          // entries once the writes above have consumed them —
-          // CacheManager holds strong references (a long-running stream
-          // would accumulate dead entries without bound), and a
-          // session-wide clearCache() would also drop caches the CALLER
-          // holds (ADVICE r5)
-          cached.foreach(_.unpersist())
-        }
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    query.awaitTermination()
-  }
-
-  /** Fresh tmp-dir for a declared streaming query's feed/warehouse —
-    * shared by [[dStreamMinhash]] and
-    * [[StreamingCorpusClean.pipeStreamClean]]. */
-  // per-JVM unique + emptied on entry — see ParquetSink.scratchDir's
-  // scaladoc for why the pid component is load-bearing
-  private[streaming] def freshDir(name: String): String =
-    ParquetSink.scratchDir(name)
+  /** The dedup MV fold. Warehouse tables: `dedup_docs` (the
+    * accumulated corpus), `dedup_bands` (LSH state), `dedup_pairs`
+    * (verified output, PK (doc_a, doc_b)). Write order per batch:
+    * docs → pairs → bands last, so a crash anywhere replays the batch
+    * against a band table that has not seen it; every table self-heals
+    * through FINAL. */
+  private val fold: StreamTwin.Fold =
+    (spark, warehouse) => (batch, maxId) => {
+      val docsPath = s"$warehouse/dedup_docs"
+      val bandsPath = s"$warehouse/dedup_bands"
+      // corpus first: the verify stage below must see this batch
+      ParquetSink.writeBatch(
+        batch.withColumn("block_height", col("doc_id")),
+        docsPath, maxId, Seq("doc_id"))
+      val allDocs = ParquetSink.readFinal(
+        spark.read.parquet(docsPath), Seq("doc_id"))
+        .select("doc_id", "text")
+      val state =
+        if (ParquetSink.hasData(bandsPath)) spark.read.parquet(bandsPath)
+        else emptyBands(spark)
+      val (newBands, pairs, cached) =
+        processBatchTracked(batch, state, allDocs)
+      ParquetSink.writeBatch(
+        pairs.withColumn("block_height", col("doc_b")),
+        s"$warehouse/dedup_pairs", maxId, pairsPk)
+      // band state commits last (see above). Replayed band rows are
+      // identical (deterministic signatures) — FINAL-safe.
+      ParquetSink.writeBatch(
+        newBands.withColumn("block_height", col("doc_id")),
+        bandsPath, maxId, Seq("doc_id", "band"))
+      // the verify stage persists per batch; drop EXACTLY those entries
+      // once the writes above have consumed them — CacheManager holds
+      // strong references (a long-running stream would accumulate dead
+      // entries without bound)
+      cached.foreach(_.unpersist())
+    }
 
   private def emptyBands(spark: SparkSession): DataFrame = {
     import spark.implicits._
     Seq.empty[(Long, Int, Long)].toDF("doc_id", "band", "bucket")
   }
 
-  /** Accumulated verified pairs, FINAL-deduped, in stable order — the
-    * read surface for the declared query and the suites. */
-  def pairsTable(spark: SparkSession, warehouse: String): DataFrame =
+  /** Accumulated verified pairs, FINAL-deduped, in stable order. */
+  private def pairsTable(spark: SparkSession, warehouse: String): DataFrame =
     ParquetSink.readFinal(
       spark.read.parquet(s"$warehouse/dedup_pairs"), pairsPk)
       .select("doc_a", "doc_b", "jaccard")
       .orderBy("doc_a", "doc_b")
 
-  /** Declared query (`d_stream_minhash`): stream the documents table
-    * through the REAL dedup stream — checkpointed file source, two
-    * chunks, a stop, then the remaining chunks against the same
-    * checkpoint (the mid-stream restart) — and return the accumulated
-    * pairs. Oracle: the exact all-pairs Jaccard, same as
-    * `d_minhash_pairs` — the incremental union over batches equals the
-    * batch LSH output because a pair's candidate condition fires
-    * exactly when its later doc arrives. Correctness-only (excluded
-    * from Bench): its cost is micro-batch orchestration, not data
-    * volume; the batch twin is the benched operator. */
-  def dStreamMinhash(spark: SparkSession, dir: String,
-      nChunks: Int = 5, threshold: Double = 0.8): DataFrame =
-    streamedPairs(spark, dir, nChunks, threshold)
+  private def documents(spark: SparkSession, dir: String): DataFrame =
+    graft.Tables.documents(spark, dir).select("doc_id", "text")
 
-  /** The streamed pair MV build shared by [[dStreamMinhash]] and the
-    * derived-at-read components twin ([[dStreamDupGroups]]). */
-  private def streamedPairs(spark: SparkSession, dir: String,
-      nChunks: Int, threshold: Double): DataFrame = {
-    graft.Tables.tune(spark)
-    val feed = freshDir("dedup_feed")
-    val warehouse = freshDir("dedup_wh")
-    val docs = graft.Tables.documents(spark, dir).select("doc_id", "text")
-    writeDocChunks(spark, docs, feed, nChunks, takeChunks = 2)
-    runStream(spark, feed, warehouse, threshold = threshold)
-    // mid-stream restart: the full feed lands (byte-identical early
-    // chunks), same checkpoint — only the unseen chunks stream,
-    // against the reloaded band table
-    writeDocChunks(spark, docs, feed, nChunks)
-    runStream(spark, feed, warehouse, threshold = threshold)
-    pairsTable(spark, warehouse)
-  }
+  /** `d_stream_minhash`: the accumulated pairs equal the batch LSH
+    * output because a pair's candidate condition fires exactly when its
+    * later doc arrives. */
+  val minhash: Twin = Twin("d_stream_minhash", "d_minhash_pairs", docSchema,
+    documents, fold, pairsTable)
 
-  /** Declared query (`d_stream_dup_groups`): connected components
-    * derived AT READ from the incrementally-maintained pair MV — the
-    * component labeling is non-additive (one late pair can merge two
-    * groups), but its input pair relation is the append-only PK-FINAL
-    * MV this stream maintains, so the read runs THE shared
-    * [[graft.llm.Dedup.minLabelComponents]] over the accumulated table
-    * (the RFM/MAD derive-at-read discipline). Equals the batch
-    * `d_dup_groups` and shares its oracle. Correctness-only. */
-  def dStreamDupGroups(spark: SparkSession, dir: String,
-      nChunks: Int = 5, threshold: Double = 0.8): DataFrame =
-    graft.llm.Dedup.minLabelComponents(
-      streamedPairs(spark, dir, nChunks, threshold)
-        .select(col("doc_a"), col("doc_b"))
+  /** `d_stream_dup_groups`: connected components derived AT READ from
+    * the pair MV — the labeling is non-additive (one late pair can
+    * merge two groups), but its input pair relation is the append-only
+    * PK-FINAL MV, so the read runs THE shared
+    * [[graft.llm.Dedup.minLabelComponents]] over it (the RFM/MAD
+    * derive-at-read discipline). */
+  val dupGroups: Twin = Twin("d_stream_dup_groups", "d_dup_groups",
+    docSchema, documents, fold,
+    (spark, wh) => Dedup.minLabelComponents(
+      pairsTable(spark, wh).select(col("doc_a"), col("doc_b"))
         .localCheckpoint())
-      .orderBy(col("doc_id"))
+      .orderBy(col("doc_id")))
 }

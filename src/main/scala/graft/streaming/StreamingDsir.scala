@@ -1,8 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 import graft.sink.ParquetSink
 import graft.llm.TextAnalysis
@@ -33,64 +31,22 @@ object StreamingDsir {
     StructField("text", StringType)))
   private val pk = Seq("doc_id", "b")
 
-  /** Drain every unseen chunk (Trigger.AvailableNow, resumable
-    * checkpoint): per micro-batch, land the batch docs' bucket counts
-    * under PK FINAL. `target` is the same any-predicate target the
-    * batch selector takes (VERDICT r14 #7) — evaluated per document
-    * while its row is in hand, stored as the `is_target` fact, so the
-    * streamed MV serves whatever target distribution the deployment
-    * points it at. */
-  def runStream(spark: SparkSession, feedDir: String, warehouse: String,
-      target: org.apache.spark.sql.Column =
-        col("lang") === "en"): Unit = {
-    val query = StreamingDedup.readDocStream(spark, feedDir, feedSchema)
-      .writeStream
-      .option("checkpointLocation", s"$warehouse/_dsir_checkpoint")
-      .foreachBatch { (b: DataFrame, _: Long) =>
-        val batch = b.localCheckpoint()
-        if (!batch.isEmpty) {
-          val maxId = batch.agg(max(col("doc_id"))).collect()(0).getLong(0)
-          ParquetSink.writeBatch(
-            TextAnalysis.dsirDocBucketCounts(batch, target = target)
-              .withColumn("block_height", col("doc_id")),
-            s"$warehouse/dsir_db", maxId, pk)
-        }
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    query.awaitTermination()
-  }
-
-  /** Weigh the accumulated corpus against the accumulated bucket model
-    * — the shared model + fold + top-k over the FINAL facts read. */
-  def readWeights(spark: SparkSession, warehouse: String,
-      k: Int = 100): DataFrame =
-    TextAnalysis.dsirFromCounts(
-      ParquetSink.readFinal(
-        spark.read.parquet(s"$warehouse/dsir_db"), pk)
-        .select(col("doc_id"), col("is_target"), col("b"), col("c")), k)
-
-  /** Declared query (`t_stream_dsir`): stream the documents table into
-    * the incremental facts MV — two chunks, a mid-stream RESTART from
-    * the same checkpoint, a compaction merge between the runs — then
-    * the shared weighing read. Equals the batch
-    * [[TextAnalysis.tDsirWeights]] and shares its oracle.
-    * Correctness-only: its cost is micro-batch orchestration, not data
-    * volume. */
-  def tStreamDsir(spark: SparkSession, dir: String,
-      nChunks: Int = 5): DataFrame = {
-    graft.Tables.tune(spark)
-    val feed = StreamingDedup.freshDir("dsir_feed")
-    val warehouse = StreamingDedup.freshDir("dsir_wh")
-    val docs = graft.Tables.documents(spark, dir)
-      .select(col("doc_id"), col("lang"), col("text"))
-    StreamingDedup.writeDocChunks(spark, docs, feed, nChunks,
-      takeChunks = 2, schema = feedSchema)
-    runStream(spark, feed, warehouse)
-    ParquetSink.compact(spark, s"$warehouse/dsir_db", pk)
-    StreamingDedup.writeDocChunks(spark, docs, feed, nChunks,
-      schema = feedSchema)
-    runStream(spark, feed, warehouse)
-    readWeights(spark, warehouse)
-  }
+  /** `t_stream_dsir`: per micro-batch, the batch docs' bucket counts
+    * land under PK FINAL (the default English target, evaluated per
+    * document while its row is in hand and stored as the `is_target`
+    * fact); a compaction runs between the waves; the read weighs the
+    * accumulated corpus against the accumulated bucket model through
+    * the shared model + fold + top-k. */
+  val dsir: Twin = Twin("t_stream_dsir", "t_dsir_weights", feedSchema,
+    (spark, dir) => graft.Tables.documents(spark, dir)
+      .select(col("doc_id"), col("lang"), col("text")),
+    (_, warehouse) => (batch, maxId) =>
+      ParquetSink.writeBatch(
+        TextAnalysis.dsirDocBucketCounts(batch)
+          .withColumn("block_height", col("doc_id")),
+        s"$warehouse/dsir_db", maxId, pk),
+    (spark, warehouse) => TextAnalysis.dsirFromCounts(
+      ParquetSink.readFinal(spark.read.parquet(s"$warehouse/dsir_db"), pk)
+        .select(col("doc_id"), col("is_target"), col("b"), col("c")), 100),
+    between = (spark, wh) => ParquetSink.compact(spark, s"$wh/dsir_db", pk))
 }

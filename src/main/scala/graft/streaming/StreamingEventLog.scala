@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types.{DoubleType, LongType, StringType,
   StructField, StructType}
 import graft.queries.EventQueries
@@ -29,164 +28,99 @@ import graft.sink.ParquetSink
   *    read would ride the summing/hourly MVs for its bounded grids;
   *    the log IS the reference's own bronze-table design.)
   *
-  * All three: checkpointed file stream, two chunks, a STOP, then the
-  * full feed against the same checkpoint (the mid-stream restart), a
-  * compaction between runs, identical oracle to the batch twin.
+  * All run the [[StreamTwin]] protocol with a compaction between the
+  * waves. The append-only log here is THE fact log: the sample/pareto
+  * twins ([[StreamingSample]]) land their document facts through the
+  * same fold.
   */
 object StreamingEventLog {
 
-  private val feedSchema = StructType(Seq(
-    StructField("doc_id", LongType), // event_id; the feed writer keys on doc_id
-    StructField("ts", LongType), // epoch nanos (feed carries the normalized Long)
+  /** The event feed every event twin streams: `doc_id` carries the
+    * event_id (the chunk writer keys on it) and `ts` the normalized
+    * epoch-nanos Long. */
+  private[streaming] val eventSchema = StructType(Seq(
+    StructField("doc_id", LongType),
+    StructField("ts", LongType),
     StructField("user_id", LongType),
     StructField("event_type", StringType),
     StructField("value", DoubleType)))
-  private val gridKeys = Seq("event_type", "epoch_hour")
-  private val gridSums = Seq("hour_dec")
 
-  /** Summing-MV stream for the hourly grid (gap fill). */
-  def runGridStream(spark: SparkSession, feedDir: String,
-      warehouse: String): Unit = {
-    val gridPath = s"$warehouse/hourly_summed"
-    val query = StreamingDedup.readDocStream(spark, feedDir, feedSchema)
-      .writeStream
-      .option("checkpointLocation", s"$warehouse/_grid_checkpoint")
-      .foreachBatch { (b: DataFrame, _: Long) =>
-        val batch = b.localCheckpoint()
-        if (!batch.isEmpty) {
-          val maxId = batch.agg(max(col("doc_id"))).collect()(0).getLong(0)
-          val partial = EventQueries.hourlyHighValue(batch)
-            .withColumn("block_height", col("epoch_hour"))
-          ParquetSink.writeSummedBatch(partial, gridPath, maxId, gridKeys)
-        }
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    query.awaitTermination()
-  }
-
-  /** Append-only event-log stream (SCD2 / interval coverage). */
-  def runLogStream(spark: SparkSession, feedDir: String,
-      warehouse: String): Unit = {
-    val logPath = s"$warehouse/events_log"
-    val query = StreamingDedup.readDocStream(spark, feedDir, feedSchema)
-      .writeStream
-      .option("checkpointLocation", s"$warehouse/_log_checkpoint")
-      .foreachBatch { (b: DataFrame, _: Long) =>
-        val batch = b.localCheckpoint()
-        if (!batch.isEmpty) {
-          val maxId = batch.agg(max(col("doc_id"))).collect()(0).getLong(0)
-          ParquetSink.writeBatch(
-            batch.withColumn("block_height", col("doc_id")),
-            logPath, maxId, Seq("doc_id"))
-        }
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    query.awaitTermination()
-  }
-
-  private def feedRows(spark: SparkSession, dir: String): DataFrame =
+  private[streaming] def events(spark: SparkSession, dir: String): DataFrame =
     graft.Tables.events(spark, dir)
       .select(col("event_id").as("doc_id"), col("ts"), col("user_id"),
         col("event_type"), col("value"))
 
-  /** Two-run stream (restart mid-feed) + compaction between runs;
-    * returns the warehouse dir. */
-  private def streamTwice(spark: SparkSession, dir: String, tag: String,
-      run: (SparkSession, String, String) => Unit,
-      compact: (SparkSession, String) => Unit,
-      nChunks: Int): String = {
-    graft.Tables.tune(spark)
-    val feed = StreamingDedup.freshDir(s"${tag}_feed")
-    val warehouse = StreamingDedup.freshDir(s"${tag}_wh")
-    val evs = feedRows(spark, dir)
-    StreamingDedup.writeDocChunks(spark, evs, feed, nChunks,
-      takeChunks = 2, schema = feedSchema)
-    run(spark, feed, warehouse)
-    compact(spark, warehouse)
-    StreamingDedup.writeDocChunks(spark, evs, feed, nChunks,
-      schema = feedSchema)
-    run(spark, feed, warehouse)
-    warehouse
-  }
+  // ---------------- the append-only fact log -------------------------
 
-  /** Declared query (`w_stream_gap_fill`) — equals the batch
-    * [[EventQueries.wGapFill]] and shares its oracle. Correctness-only:
-    * its cost is micro-batch orchestration, not data volume. */
-  def wStreamGapFill(spark: SparkSession, dir: String,
-      nChunks: Int = 5): DataFrame = {
-    val warehouse = streamTwice(spark, dir, "gapfill", runGridStream,
-      (s, wh) => ParquetSink.compactSummed(
-        s, s"$wh/hourly_summed", gridKeys, gridSums),
-      nChunks)
-    val grid = ParquetSink.readSummed(
-      spark.read.parquet(s"$warehouse/hourly_summed"), gridKeys, gridSums)
-      .select(col("event_type"), col("epoch_hour"), col("hour_dec"))
-    EventQueries.gapFillFromHourly(grid)
-  }
+  /** Land each micro-batch as-is under PK FINAL on doc_id: a row's facts
+    * never change, so replays collapse by key. */
+  private[streaming] val logFold: StreamTwin.Fold =
+    (_, warehouse) => (batch, maxId) =>
+      ParquetSink.writeBatch(batch.withColumn("block_height", col("doc_id")),
+        s"$warehouse/facts", maxId, Seq("doc_id"))
 
-  /** Declared query (`k_stream_scd2`) — equals the batch
-    * [[EventQueries.kScd2History]] and shares its oracle. */
-  def kStreamScd2(spark: SparkSession, dir: String,
-      nChunks: Int = 5): DataFrame = {
-    val warehouse = streamTwice(spark, dir, "scd2", runLogStream,
-      (s, wh) => ParquetSink.compact(s, s"$wh/events_log", Seq("doc_id")),
-      nChunks)
-    EventQueries.scd2FromEvents(readLog(spark, warehouse)
-      .select(col("user_id"), expr("ts DIV 1000").as("ts_us"),
-        col("doc_id").as("event_id"), col("event_type")))
-  }
+  private[streaming] def compactLog(spark: SparkSession,
+      warehouse: String): Unit =
+    ParquetSink.compact(spark, s"$warehouse/facts", Seq("doc_id"))
 
-  /** Declared query (`w_stream_interval_coverage`) — equals the batch
-    * [[EventQueries.wIntervalCoverage]] and shares its oracle. */
-  def wStreamIntervalCoverage(spark: SparkSession, dir: String,
-      nChunks: Int = 5): DataFrame = {
-    val warehouse = streamTwice(spark, dir, "coverage", runLogStream,
-      (s, wh) => ParquetSink.compact(s, s"$wh/events_log", Seq("doc_id")),
-      nChunks)
-    EventQueries.coverageFromEvents(spark, readLog(spark, warehouse)
-      .select(col("user_id"), expr("ts DIV 1000").as("ts_us"),
-        col("doc_id").as("event_id")))
-  }
+  private[streaming] def readLog(spark: SparkSession,
+      warehouse: String): DataFrame =
+    ParquetSink.readFinal(spark.read.parquet(s"$warehouse/facts"),
+      Seq("doc_id"))
 
-  /** Declared query (`w_stream_funnel`) — equals the batch
-    * [[EventQueries.wFunnelSteps]] and shares its oracle. Funnel levels
-    * are NOT additive (one late event can upgrade a user's deepest
-    * chain), but they derive from the append-only event log — the same
-    * PK-FINAL facts MV the SCD2/coverage twins ride, answered through
-    * the SHARED [[EventQueries.funnelFromEvents]] at read. */
-  def wStreamFunnel(spark: SparkSession, dir: String,
-      nChunks: Int = 5): DataFrame = {
-    val warehouse = streamTwice(spark, dir, "funnel", runLogStream,
-      (s, wh) => ParquetSink.compact(s, s"$wh/events_log", Seq("doc_id")),
-      nChunks)
-    EventQueries.funnelFromEvents(spark,
-      readLog(spark, warehouse)
-        .select(col("user_id"), col("ts"), col("event_type")),
-      86400L * 1000000000L)
-  }
+  private def logTwin(name: String, batch: String,
+      read: DataFrame => DataFrame): Twin =
+    Twin(name, batch, eventSchema, events, logFold,
+      (spark, wh) => read(readLog(spark, wh)), between = compactLog)
 
-  private def readLog(spark: SparkSession, warehouse: String): DataFrame =
-    ParquetSink.readFinal(
-      spark.read.parquet(s"$warehouse/events_log"), Seq("doc_id"))
+  private val gridKeys = Seq("event_type", "epoch_hour")
+  private val gridSums = Seq("hour_dec")
 
-  /** Declared query (`w_stream_rfm`) — equals the batch
-    * [[EventQueries.wRfm]] and shares its oracle. Quartile scores are
-    * non-additive (a late purchase moves boundaries), but they derive
-    * from the append-only purchase log — the same PK-FINAL facts MV as
-    * the SCD2/coverage/funnel twins, answered through the SHARED
-    * [[EventQueries.rfmFromPurchases]] at read. */
-  def wStreamRfm(spark: SparkSession, dir: String,
-      nChunks: Int = 5): DataFrame = {
-    val warehouse = streamTwice(spark, dir, "rfm", runLogStream,
-      (s, wh) => ParquetSink.compact(s, s"$wh/events_log", Seq("doc_id")),
-      nChunks)
-    EventQueries.rfmFromPurchases(readLog(spark, warehouse)
+  /** `w_stream_gap_fill`: the hourly grid as a summing MV (merged
+    * between the waves), the dense forward fill at read. */
+  val gapFill: Twin = Twin("w_stream_gap_fill", "w_gap_fill", eventSchema,
+    events,
+    (_, warehouse) => (batch, maxId) =>
+      ParquetSink.writeSummedBatch(
+        EventQueries.hourlyHighValue(batch)
+          .withColumn("block_height", col("epoch_hour")),
+        s"$warehouse/hourly_summed", maxId, gridKeys),
+    (spark, warehouse) => EventQueries.gapFillFromHourly(
+      ParquetSink.readSummed(
+        spark.read.parquet(s"$warehouse/hourly_summed"), gridKeys, gridSums)
+        .select(col("event_type"), col("epoch_hour"), col("hour_dec"))),
+    between = (spark, wh) => ParquetSink.compactSummed(
+      spark, s"$wh/hourly_summed", gridKeys, gridSums))
+
+  /** `k_stream_scd2`: state runs → validity intervals from the log. */
+  val scd2: Twin = logTwin("k_stream_scd2", "k_scd2_history", log =>
+    EventQueries.scd2FromEvents(log.select(col("user_id"),
+      expr("ts DIV 1000").as("ts_us"), col("doc_id").as("event_id"),
+      col("event_type"))))
+
+  /** `w_stream_interval_coverage`: interval-union busy time from the log. */
+  val coverage: Twin = logTwin("w_stream_interval_coverage",
+    "w_interval_coverage", log =>
+      EventQueries.coverageFromEvents(log.sparkSession, log.select(
+        col("user_id"), expr("ts DIV 1000").as("ts_us"),
+        col("doc_id").as("event_id"))))
+
+  /** `w_stream_funnel`: funnel levels are NOT additive (one late event
+    * can upgrade a user's deepest chain), but they derive from the log
+    * through the SHARED [[EventQueries.funnelFromEvents]] at read. */
+  val funnel: Twin = logTwin("w_stream_funnel", "w_funnel_steps", log =>
+    EventQueries.funnelFromEvents(log.sparkSession,
+      log.select(col("user_id"), col("ts"), col("event_type")),
+      86400L * 1000000000L))
+
+  /** `w_stream_rfm`: quartile scores are non-additive (a late purchase
+    * moves boundaries), but they derive from the purchase rows of the
+    * log through the SHARED [[EventQueries.rfmFromPurchases]]. */
+  val rfm: Twin = logTwin("w_stream_rfm", "w_rfm", log =>
+    EventQueries.rfmFromPurchases(log
       .filter(col("event_type") === "purchase")
       .select(col("user_id"), expr("ts DIV 1000L").as("ts_us"),
-        col("value")))
-  }
+        col("value"))))
 
   // ---------------- streaming tombstone deletes ----------------------
 
@@ -227,67 +161,40 @@ object StreamingEventLog {
       .select(tombstoneFeedSchema.fieldNames.map(col): _*)
   }
 
-  /** PK-FINAL sink stream for the tombstone feed: each micro-batch is
-    * split by the rows' WAVE seq (≤ 4 distinct values by construction
-    * — a bounded collect) and appended per wave, so version semantics
-    * are independent of micro-batch slicing; a replayed wave re-inserts
-    * under its original seq and FINAL's deterministic tie-break absorbs
-    * it. */
-  def runTombstoneStream(spark: SparkSession, feedDir: String,
-      warehouse: String): Unit = {
-    val sinkPath = s"$warehouse/tomb"
-    val query = StreamingDedup.readDocStream(spark, feedDir,
-        tombstoneFeedSchema)
-      .writeStream
-      .option("checkpointLocation", s"$warehouse/_tomb_checkpoint")
-      .foreachBatch { (b: DataFrame, _: Long) =>
-        val batch = b.localCheckpoint()
-        if (!batch.isEmpty) {
-          val seqs = batch.select(col("seq")).distinct()
-            .collect().map(_.getLong(0)).sorted
-          seqs.foreach { s =>
-            ParquetSink.writeBatch(
-              batch.filter(col("seq") === s)
-                .select(col("event_id"), col("user_id"),
-                  col("event_type"), col("value"), col("block_height"),
-                  col("is_deleted")),
-              sinkPath, s, Seq("event_id"))
-          }
-        }
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    query.awaitTermination()
-  }
-
-  /** Declared query (`k_stream_tombstone`) — the tombstone-DELETE path
-    * through the REAL streaming engine, same oracle as the batch
-    * [[EventQueries.kTombstoneDelete]]: checkpointed file stream over
-    * the four waves, a STOP after 7/8 chunks (past the delete waves,
-    * so tombstones exist at the pause), a compaction the tombstones
-    * must survive, then the full feed against the same checkpoint (the
-    * mid-stream restart). The final read hides flagged keys and must
+  /** `k_stream_tombstone`: the tombstone-DELETE path through the
+    * streaming engine. Each micro-batch is split by the rows' WAVE seq
+    * (≤ 4 distinct values by construction — a bounded collect) and
+    * appended per wave, so version semantics are independent of
+    * micro-batch slicing; a replayed wave re-inserts under its original
+    * seq and FINAL's deterministic tie-break absorbs it. The stop comes
+    * after 4 of the 5 chunks — past the start of the delete waves, so
+    * tombstones exist at the pause — and the compaction between the
+    * waves must keep them. The final read hides flagged keys and must
     * equal the closed-form alive set. */
-  def kStreamTombstone(spark: SparkSession, dir: String,
-      nChunks: Int = 8): DataFrame = {
-    import graft.validate.Validation.h60
-    import graft.Tables.dsum
-    graft.Tables.tune(spark)
-    val feed = StreamingDedup.freshDir("tomb_feed")
-    val warehouse = StreamingDedup.freshDir("tomb_wh")
-    val waves = tombstoneWaves(spark, dir)
-    StreamingDedup.writeDocChunks(spark, waves, feed, nChunks,
-      takeChunks = nChunks - 1, schema = tombstoneFeedSchema)
-    runTombstoneStream(spark, feed, warehouse)
-    ParquetSink.compact(spark, s"$warehouse/tomb", Seq("event_id"))
-    StreamingDedup.writeDocChunks(spark, waves, feed, nChunks,
-      schema = tombstoneFeedSchema)
-    runTombstoneStream(spark, feed, warehouse)
-    ParquetSink.readFinalWithDeletes(
-      spark.read.parquet(s"$warehouse/tomb"), Seq("event_id"))
-      .agg(
-        count(lit(1)).as("n_alive"),
-        bit_xor(h60(col("event_id").cast("string"))).as("alive_fp"),
-        dsum(col("value"), 2).as("sum_value"))
-  }
+  val tombstone: Twin = Twin("k_stream_tombstone", "k_tombstone_delete",
+    tombstoneFeedSchema, tombstoneWaves,
+    (_, warehouse) => (batch, _) => {
+      val seqs = batch.select(col("seq")).distinct()
+        .collect().map(_.getLong(0)).sorted
+      seqs.foreach { s =>
+        ParquetSink.writeBatch(
+          batch.filter(col("seq") === s)
+            .select(col("event_id"), col("user_id"), col("event_type"),
+              col("value"), col("block_height"), col("is_deleted")),
+          s"$warehouse/tomb", s, Seq("event_id"))
+      }
+    },
+    (spark, warehouse) => {
+      import graft.validate.Validation.h60
+      import graft.Tables.dsum
+      ParquetSink.readFinalWithDeletes(
+        spark.read.parquet(s"$warehouse/tomb"), Seq("event_id"))
+        .agg(
+          count(lit(1)).as("n_alive"),
+          bit_xor(h60(col("event_id").cast("string"))).as("alive_fp"),
+          dsum(col("value"), 2).as("sum_value"))
+    },
+    between = (spark, wh) =>
+      ParquetSink.compact(spark, s"$wh/tomb", Seq("event_id")),
+    firstWave = 4)
 }

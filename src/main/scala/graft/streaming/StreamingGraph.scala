@@ -2,9 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
-import org.apache.spark.sql.types.{LongType, StringType, StructField,
-  StructType}
 import graft.sink.ParquetSink
 import graft.queries.CoOccurrenceMv
 
@@ -40,11 +37,6 @@ import graft.queries.CoOccurrenceMv
   */
 object StreamingGraph {
 
-  private val eventSchema = StructType(Seq(
-    StructField("doc_id", LongType), // event_id; the feed writer keys on doc_id
-    StructField("ts", LongType),
-    StructField("event_type", StringType),
-    StructField("user_id", LongType)))
   private val factPk = Seq("event_type", "bkt", "user_id")
   private val pairKeys = Seq("u", "v")
   private val pairSums = Seq("nco")
@@ -59,127 +51,83 @@ object StreamingGraph {
         .toDF("event_type", "bkt", "user_id")
     }
 
-  /** Drain every unseen chunk file (Trigger.AvailableNow, resumable
-    * checkpoint), folding each micro-batch's NEW occupancy facts into
-    * the fact table and their pair deltas into the summing MV. */
-  def runStream(spark: SparkSession, feedDir: String,
-      warehouse: String): Unit = {
-    val factsPath = s"$warehouse/graph_facts"
-    val pairsPath = s"$warehouse/graph_pairs_summed"
-    val query = StreamingDedup.readDocStream(spark, feedDir, eventSchema)
-      .writeStream
-      .option("checkpointLocation", s"$warehouse/_graph_checkpoint")
-      .foreachBatch { (b: DataFrame, _: Long) =>
-        val batch = b.localCheckpoint()
-        if (!batch.isEmpty) {
-          val maxId = batch.agg(max(col("doc_id"))).collect()(0).getLong(0)
-          val existing = factsOr(spark, factsPath)
-          val newFacts = batch
-            .select(col("event_type"),
-              expr(s"ts DIV ${CoOccurrenceMv.BucketNs}L").as("bkt"),
-              col("user_id"))
-            .distinct()
-            .join(existing, factPk, "left_anti")
-            .localCheckpoint() // read 3x (old-join, new-join, append)
-          if (!newFacts.isEmpty) {
-            val vsOld = newFacts.as("n")
-              .join(existing.as("o"),
-                col("n.event_type") === col("o.event_type") &&
-                  col("n.bkt") === col("o.bkt") &&
-                  col("n.user_id") =!= col("o.user_id"))
-              .select(
-                least(col("n.user_id"), col("o.user_id")).as("u"),
-                greatest(col("n.user_id"), col("o.user_id")).as("v"))
-            val vsNew = newFacts.as("x")
-              .join(newFacts.as("y"),
-                col("x.event_type") === col("y.event_type") &&
-                  col("x.bkt") === col("y.bkt") &&
-                  col("x.user_id") < col("y.user_id"))
-              .select(col("x.user_id").as("u"), col("y.user_id").as("v"))
-            val deltas = vsOld.unionByName(vsNew)
-              .groupBy(col("u"), col("v"))
-              .agg(count(lit(1)).as("nco"))
-              .withColumn("block_height", pmod(col("u"), lit(100L)))
-            // pair deltas FIRST (see object scaladoc: replay safety)
-            ParquetSink.writeSummedBatch(deltas, pairsPath, maxId, pairKeys)
-            ParquetSink.writeBatch(
-              newFacts.withColumn("block_height", pmod(col("bkt"), lit(100L))),
-              factsPath, maxId, factPk)
-          }
-        }
+  /** Fold each micro-batch's NEW occupancy facts into the fact table
+    * and their pair deltas into the summing MV. */
+  private val fold: StreamTwin.Fold =
+    (spark, warehouse) => (batch, maxId) => {
+      val factsPath = s"$warehouse/graph_facts"
+      val existing = factsOr(spark, factsPath)
+      val newFacts = batch
+        .select(col("event_type"),
+          expr(s"ts DIV ${CoOccurrenceMv.BucketNs}L").as("bkt"),
+          col("user_id"))
+        .distinct()
+        .join(existing, factPk, "left_anti")
+        .localCheckpoint() // read 3x (old-join, new-join, append)
+      if (!newFacts.isEmpty) {
+        val vsOld = newFacts.as("n")
+          .join(existing.as("o"),
+            col("n.event_type") === col("o.event_type") &&
+              col("n.bkt") === col("o.bkt") &&
+              col("n.user_id") =!= col("o.user_id"))
+          .select(
+            least(col("n.user_id"), col("o.user_id")).as("u"),
+            greatest(col("n.user_id"), col("o.user_id")).as("v"))
+        val vsNew = newFacts.as("x")
+          .join(newFacts.as("y"),
+            col("x.event_type") === col("y.event_type") &&
+              col("x.bkt") === col("y.bkt") &&
+              col("x.user_id") < col("y.user_id"))
+          .select(col("x.user_id").as("u"), col("y.user_id").as("v"))
+        val deltas = vsOld.unionByName(vsNew)
+          .groupBy(col("u"), col("v"))
+          .agg(count(lit(1)).as("nco"))
+          .withColumn("block_height", pmod(col("u"), lit(100L)))
+        // pair deltas FIRST (see object scaladoc: replay safety)
+        ParquetSink.writeSummedBatch(deltas,
+          s"$warehouse/graph_pairs_summed", maxId, pairKeys)
+        ParquetSink.writeBatch(
+          newFacts.withColumn("block_height", pmod(col("bkt"), lit(100L))),
+          factsPath, maxId, factPk)
       }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    query.awaitTermination()
-  }
+    }
 
   /** The maintained edge table: summed pair counts through THE shared
     * threshold read. */
-  def edgesTable(spark: SparkSession, warehouse: String): DataFrame =
+  private[graft] def edgesTable(spark: SparkSession, warehouse: String): DataFrame =
     CoOccurrenceMv.edgesFromCounts(
       ParquetSink.readSummed(
         spark.read.parquet(s"$warehouse/graph_pairs_summed"),
         pairKeys, pairSums))
 
-  /** Stream the events table into the incrementally-maintained graph
-    * (two chunks, a mid-stream restart from the same checkpoint, a
-    * compaction of BOTH state tables between the runs) and return the
-    * accumulated edge relation — shared by the declared twin and the
-    * suite's streamed ≡ batch pins. */
-  private[graft] def streamedEdges(spark: SparkSession, dir: String,
-      nChunks: Int): DataFrame = {
-    graft.Tables.tune(spark)
-    val feed = StreamingDedup.freshDir("graph_feed")
-    val warehouse = StreamingDedup.freshDir("graph_wh")
-    val evs = graft.Tables.events(spark, dir)
-      .select(col("event_id").as("doc_id"), col("ts"), col("event_type"),
-        col("user_id"))
-    StreamingDedup.writeDocChunks(spark, evs, feed, nChunks,
-      takeChunks = 2, schema = eventSchema)
-    runStream(spark, feed, warehouse)
-    ParquetSink.compactSummed(spark, s"$warehouse/graph_pairs_summed",
-      pairKeys, pairSums)
-    ParquetSink.compact(spark, s"$warehouse/graph_facts", factPk)
-    StreamingDedup.writeDocChunks(spark, evs, feed, nChunks,
-      schema = eventSchema)
-    runStream(spark, feed, warehouse)
-    edgesTable(spark, warehouse)
-  }
+  /** A twin over the maintained edge MV: both state tables compacted
+    * between the waves, then `analytic` over the edge relation through
+    * the SAME from-edges body as its batch query. */
+  private def edgeTwin(name: String, batch: String,
+      analytic: DataFrame => DataFrame): Twin =
+    Twin(name, batch, StreamingEventLog.eventSchema, StreamingEventLog.events,
+      fold, (spark, wh) => analytic(edgesTable(spark, wh).localCheckpoint()),
+      between = (spark, wh) => {
+        ParquetSink.compactSummed(spark, s"$wh/graph_pairs_summed",
+          pairKeys, pairSums)
+        ParquetSink.compact(spark, s"$wh/graph_facts", factPk)
+      })
 
-  /** Declared query (`g_stream_pagerank`): PageRank over the
-    * incrementally-maintained edge MV — two chunk waves, a mid-stream
-    * checkpoint restart, both state tables compacted between waves —
-    * through the SAME from-edges iteration body as the batch query.
-    * Equals the batch `g_pagerank` and shares its oracle.
-    * Correctness-only: its cost is micro-batch orchestration, not data
-    * volume. */
-  def gStreamPagerank(spark: SparkSession, dir: String,
-      nChunks: Int = 5): DataFrame =
-    graft.queries.EventQueries.pageRankFromEdges(
-      streamedEdges(spark, dir, nChunks).localCheckpoint())
+  /** `g_stream_pagerank`: the integer-exact damped PageRank. */
+  val pagerank: Twin = edgeTwin("g_stream_pagerank", "g_pagerank",
+    graft.queries.EventQueries.pageRankFromEdges(_))
 
-  /** Declared query (`g_stream_bfs`): multi-source BFS over the same
-    * incrementally-maintained edge MV, through the SAME from-edges body
-    * as the batch query. Equals the batch `g_bfs_distance` and shares
-    * its oracle. Correctness-only (micro-batch orchestration cost). */
-  def gStreamBfs(spark: SparkSession, dir: String,
-      nChunks: Int = 5): DataFrame =
-    graft.queries.EventQueries.bfsFromEdges(
-      streamedEdges(spark, dir, nChunks).localCheckpoint())
+  /** `g_stream_bfs`: multi-source BFS min-hop distances. */
+  val bfs: Twin = edgeTwin("g_stream_bfs", "g_bfs_distance",
+    graft.queries.EventQueries.bfsFromEdges(_))
 
-  /** Declared query (`g_stream_components`): connected components over
-    * the same incrementally-maintained edge MV, through the SAME shared
-    * min-label body as the batch query ([[graft.llm.Dedup
-    * .minLabelComponents]] — components are non-additive, so they
-    * derive at read, the `d_stream_dup_groups` discipline). Equals the
-    * batch `g_components` and shares its oracle. Correctness-only
-    * (micro-batch orchestration cost). */
-  def gStreamComponents(spark: SparkSession, dir: String,
-      nChunks: Int = 5): DataFrame =
-    graft.llm.Dedup.minLabelComponents(
-      streamedEdges(spark, dir, nChunks)
-        .select(col("u").as("doc_a"), col("v").as("doc_b"))
-        .localCheckpoint())
+  /** `g_stream_components`: connected components through THE shared
+    * min-label body ([[graft.llm.Dedup.minLabelComponents]] —
+    * components are non-additive, so they derive at read, the
+    * `d_stream_dup_groups` discipline). */
+  val components: Twin = edgeTwin("g_stream_components", "g_components",
+    edges => graft.llm.Dedup.minLabelComponents(
+      edges.select(col("u").as("doc_a"), col("v").as("doc_b")))
       .select(col("doc_id").as("user_id"), col("group_id"))
-      .orderBy(col("user_id"))
+      .orderBy(col("user_id")))
 }

@@ -1,8 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 import graft.sink.ParquetSink
 import graft.llm.TextAnalysis
@@ -36,68 +34,34 @@ object StreamingHeavyHitters {
   private val keys = Seq("token")
   private val sums = Seq("tf")
 
-  /** Drain every unseen chunk file (Trigger.AvailableNow, resumable
-    * checkpoint), folding each micro-batch into the summing table. */
-  def runStream(spark: SparkSession, feedDir: String,
-      warehouse: String): Unit = {
-    val path = s"$warehouse/vocab_summed"
-    val query = StreamingDedup.readDocStream(spark, feedDir, hhSchema)
-      .writeStream
-      .option("checkpointLocation", s"$warehouse/_vocab_checkpoint")
-      .foreachBatch { (b: DataFrame, _: Long) =>
-        val batch = b.localCheckpoint()
-        if (!batch.isEmpty) {
-          val maxId = batch.agg(max(col("doc_id"))).collect()(0).getLong(0)
-          val partial = batch
-            .select(explode(TextAnalysis.tokens(col("text"))).as("token"))
-            .groupBy(col("token"))
-            .agg(count(lit(1)).as("tf"))
-            .withColumn("block_height", lit(maxId))
-          ParquetSink.writeSummedBatch(partial, path, maxId, keys)
-        }
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    query.awaitTermination()
-  }
-
-  /** The φ-threshold read over the accumulated summed vocabulary —
-    * shared by the declared query and the randomized soak. */
-  def readHeavyHitters(spark: SparkSession, warehouse: String,
-      phi: Double = 0.02): DataFrame = {
-    val summed = ParquetSink.readSummed(
-      spark.read.parquet(s"$warehouse/vocab_summed"), keys, sums)
-      .select(col("token"), col("tf"))
-    // ceil(φ·N) exactly as the batch query computes it (same double
-    // arithmetic, same bits)
-    val n = summed.agg(sum(col("tf"))).collect()(0).getLong(0)
-    val minCount = math.ceil(phi * n).toLong
-    summed.filter(col("tf") >= lit(minCount))
-      .orderBy(col("tf").desc, col("token"))
-  }
-
-  /** Declared query (`t_stream_heavy_hitters`): stream the documents
-    * table through the incremental vocabulary MV — two chunks, a
-    * mid-stream restart from the same checkpoint (only unseen chunks
-    * replay), a compaction MERGE between the two runs — then the
-    * φ-threshold read over the summed counts. Equals the batch
-    * [[graft.llm.TextAnalysis.tHeavyHitters]] and shares its oracle.
-    * Correctness-only: its cost is micro-batch orchestration, not data
-    * volume. */
-  def tStreamHeavyHitters(spark: SparkSession, dir: String,
-      phi: Double = 0.02, nChunks: Int = 5): DataFrame = {
-    graft.Tables.tune(spark)
-    val feed = StreamingDedup.freshDir("hh_feed")
-    val warehouse = StreamingDedup.freshDir("hh_wh")
-    val docs = graft.Tables.documents(spark, dir)
-      .select(col("doc_id"), col("text"))
-    StreamingDedup.writeDocChunks(spark, docs, feed, nChunks,
-      takeChunks = 2, schema = hhSchema)
-    runStream(spark, feed, warehouse)
-    ParquetSink.compactSummed(spark, s"$warehouse/vocab_summed", keys, sums)
-    StreamingDedup.writeDocChunks(spark, docs, feed, nChunks,
-      schema = hhSchema)
-    runStream(spark, feed, warehouse)
-    readHeavyHitters(spark, warehouse, phi)
-  }
+  /** `t_stream_heavy_hitters`: each micro-batch folds to per-token
+    * partial counts in the summing table; a compaction MERGE runs
+    * between the waves; the read applies the φ-threshold (φ = 0.02)
+    * over the summed counts. */
+  val heavyHitters: Twin = Twin("t_stream_heavy_hitters", "t_heavy_hitters",
+    hhSchema,
+    (spark, dir) => graft.Tables.documents(spark, dir)
+      .select(col("doc_id"), col("text")),
+    (_, warehouse) => (batch, maxId) => {
+      val partial = batch
+        .select(explode(TextAnalysis.tokens(col("text"))).as("token"))
+        .groupBy(col("token"))
+        .agg(count(lit(1)).as("tf"))
+        .withColumn("block_height", lit(maxId))
+      ParquetSink.writeSummedBatch(partial, s"$warehouse/vocab_summed",
+        maxId, keys)
+    },
+    (spark, warehouse) => {
+      val summed = ParquetSink.readSummed(
+        spark.read.parquet(s"$warehouse/vocab_summed"), keys, sums)
+        .select(col("token"), col("tf"))
+      // ceil(φ·N) exactly as the batch query computes it (same double
+      // arithmetic, same bits)
+      val n = summed.agg(sum(col("tf"))).collect()(0).getLong(0)
+      val minCount = math.ceil(0.02 * n).toLong
+      summed.filter(col("tf") >= lit(minCount))
+        .orderBy(col("tf").desc, col("token"))
+    },
+    between = (spark, wh) =>
+      ParquetSink.compactSummed(spark, s"$wh/vocab_summed", keys, sums))
 }

@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 import graft.sink.ParquetSink
 import graft.llm.TextAnalysis
@@ -41,49 +40,34 @@ object StreamingLmScore {
   private val triKeys = Seq("w1", "w2", "w3")
   private val docKeys = Seq("doc_id", "w1", "w2", "w3")
 
-  /** Drain every unseen chunk (Trigger.AvailableNow, resumable
-    * checkpoint): per micro-batch, fold the train rows into the three
-    * model summing MVs and land every doc's trigram facts under PK
-    * FINAL. */
-  def runStream(spark: SparkSession, feedDir: String,
-      warehouse: String): Unit = {
-    val query = StreamingDedup.readDocStream(spark, feedDir, feedSchema)
-      .writeStream
-      .option("checkpointLocation", s"$warehouse/_lm_checkpoint")
-      .foreachBatch { (b: DataFrame, _: Long) =>
-        val batch = b.localCheckpoint()
-        if (!batch.isEmpty) {
-          val maxId = batch.agg(max(col("doc_id"))).collect()(0).getLong(0)
-          val toks = TextAnalysis.withSplit(batch)
-            .select(col("doc_id"), col("split"),
-              TextAnalysis.tokens(col("text")).as("t"))
-            .localCheckpoint()
-          val train = toks.filter(col("split") === "train")
-          def summed(partial: DataFrame, table: String,
-              keys: Seq[String]): Unit =
-            ParquetSink.writeSummedBatch(
-              partial.withColumn("block_height", lit(maxId)),
-              s"$warehouse/$table", maxId, keys)
-          summed(TextAnalysis.lmUnigramCounts(train)
-            .withColumnRenamed("cu", "cnt"), "lm_uni", uniKeys)
-          summed(TextAnalysis.lmBigramCounts(train)
-            .withColumnRenamed("cb", "cnt"), "lm_bi", biKeys)
-          summed(TextAnalysis.lmTrigramCounts(train)
-            .withColumnRenamed("c3", "cnt"), "lm_tri", triKeys)
-          ParquetSink.writeBatch(
-            TextAnalysis.lmDocTrigrams(toks)
-              .withColumn("block_height", col("doc_id")),
-            s"$warehouse/lm_doc_tri", maxId, docKeys)
-        }
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    query.awaitTermination()
-  }
+  /** Per micro-batch: fold the train rows into the three model summing
+    * MVs and land every doc's trigram facts under PK FINAL. */
+  private val fold: StreamTwin.Fold =
+    (_, warehouse) => (batch, maxId) => {
+      val toks = TextAnalysis.withSplit(batch)
+        .select(col("doc_id"), col("split"),
+          TextAnalysis.tokens(col("text")).as("t"))
+        .localCheckpoint()
+      val train = toks.filter(col("split") === "train")
+      def summed(partial: DataFrame, table: String, keys: Seq[String]): Unit =
+        ParquetSink.writeSummedBatch(
+          partial.withColumn("block_height", lit(maxId)),
+          s"$warehouse/$table", maxId, keys)
+      summed(TextAnalysis.lmUnigramCounts(train)
+        .withColumnRenamed("cu", "cnt"), "lm_uni", uniKeys)
+      summed(TextAnalysis.lmBigramCounts(train)
+        .withColumnRenamed("cb", "cnt"), "lm_bi", biKeys)
+      summed(TextAnalysis.lmTrigramCounts(train)
+        .withColumnRenamed("c3", "cnt"), "lm_tri", triKeys)
+      ParquetSink.writeBatch(
+        TextAnalysis.lmDocTrigrams(toks)
+          .withColumn("block_height", col("doc_id")),
+        s"$warehouse/lm_doc_tri", maxId, docKeys)
+    }
 
   /** Score the accumulated corpus against the accumulated model —
     * the shared scoring join over the four MV reads. */
-  def readScores(spark: SparkSession, warehouse: String): DataFrame = {
+  private def readScores(spark: SparkSession, warehouse: String): DataFrame = {
     def model(table: String, keys: Seq[String], as: String): DataFrame =
       ParquetSink.readSummed(
         spark.read.parquet(s"$warehouse/$table"), keys, Seq("cnt"))
@@ -99,29 +83,17 @@ object StreamingLmScore {
     TextAnalysis.lmScoreFromCounts(docTri, uni, big, tri, nTotal)
   }
 
-  /** Declared query (`t_stream_lm_score`): stream the documents table
-    * through the incremental model + facts MVs — two chunks, a
-    * mid-stream RESTART from the same checkpoint, a compaction merge
-    * between the runs — then the shared scoring read. Equals the batch
-    * [[TextAnalysis.tLmScore]] and shares its oracle. Correctness-only:
-    * its cost is micro-batch orchestration, not data volume. */
-  def tStreamLmScore(spark: SparkSession, dir: String,
-      nChunks: Int = 5): DataFrame = {
-    graft.Tables.tune(spark)
-    val feed = StreamingDedup.freshDir("lm_feed")
-    val warehouse = StreamingDedup.freshDir("lm_wh")
-    val docs = graft.Tables.documents(spark, dir)
-      .select(col("doc_id"), col("text"))
-    StreamingDedup.writeDocChunks(spark, docs, feed, nChunks,
-      takeChunks = 2, schema = feedSchema)
-    runStream(spark, feed, warehouse)
-    ParquetSink.compactSummed(spark, s"$warehouse/lm_uni", uniKeys, Seq("cnt"))
-    ParquetSink.compactSummed(spark, s"$warehouse/lm_bi", biKeys, Seq("cnt"))
-    ParquetSink.compactSummed(spark, s"$warehouse/lm_tri", triKeys, Seq("cnt"))
-    ParquetSink.compact(spark, s"$warehouse/lm_doc_tri", docKeys)
-    StreamingDedup.writeDocChunks(spark, docs, feed, nChunks,
-      schema = feedSchema)
-    runStream(spark, feed, warehouse)
-    readScores(spark, warehouse)
-  }
+  /** `t_stream_lm_score`: the model + facts MVs, all four compacted
+    * between the waves, then the shared scoring read. */
+  val lmScore: Twin = Twin("t_stream_lm_score", "t_lm_score", feedSchema,
+    (spark, dir) => graft.Tables.documents(spark, dir)
+      .select(col("doc_id"), col("text")),
+    fold, readScores,
+    between = (spark, wh) => {
+      Seq("lm_uni" -> uniKeys, "lm_bi" -> biKeys, "lm_tri" -> triKeys)
+        .foreach { case (t, keys) =>
+          ParquetSink.compactSummed(spark, s"$wh/$t", keys, Seq("cnt"))
+        }
+      ParquetSink.compact(spark, s"$wh/lm_doc_tri", docKeys)
+    })
 }

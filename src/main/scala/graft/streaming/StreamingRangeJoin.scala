@@ -2,8 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
-import org.apache.spark.sql.types.{LongType, StructField, StructType}
+import org.apache.spark.sql.types.StructType
 import graft.sink.ParquetSink
 
 /** STREAM-STREAM interval join — the watermarked two-stream join of
@@ -23,9 +22,8 @@ import graft.sink.ParquetSink
   * by the shared oracle.
   *
   * Watermark sizing: delay = join window (`windowUs`) + 1 h slack,
-  * DERIVED from the parameter (ADVICE r10: a hard-coded "2 hours"
-  * held only for the default 1 h window — a caller passing a larger
-  * window would silently get less slack than promised). The feed is
+  * DERIVED from the window (ADVICE r10: a hard-coded "2 hours" held
+  * only for a 1 h window). The feed is
   * event-time ordered (measured disorder 0 — block/event streams
   * arrive in height order here, as in the reference), so this delay
   * drops nothing; at production the slack term is the ingest's
@@ -40,23 +38,18 @@ import graft.sink.ParquetSink
   * every other sink in the engine. */
 object StreamingRangeJoin {
 
-  private val feedSchema = StructType(Seq(
-    StructField("doc_id", LongType), // event_id; the feed writer keys on doc_id
-    StructField("ts", LongType), // epoch nanos (feed carries the normalized Long)
-    StructField("user_id", LongType)))
   private val pairPk = Seq("event_a", "event_b")
+  private val windowUs = 3600000000L
 
-  /** Drain every unseen chunk file through the watermarked two-stream
-    * join (Trigger.AvailableNow, resumable checkpoint — join state
-    * included). */
-  def runStream(spark: SparkSession, feedDir: String, warehouse: String,
-      windowUs: Long): Unit = {
-    val path = s"$warehouse/range_pairs"
-    // window + 1 h slack, in µs — the delay scales with the caller's
-    // window so the eviction slack can never drift below the contract
+  /** The watermarked two-stream join over the chunk feed. It exposes
+    * `event_b` as the drain's `doc_id` rail. */
+  private def joined(spark: SparkSession, feedDir: String,
+      schema: StructType): DataFrame = {
+    // window + 1 h slack, in µs — the delay scales with the window so
+    // the eviction slack can never drift below the contract
     val delay = s"${windowUs + 3600000000L} microseconds"
     def side(tag: String): DataFrame =
-      StreamingDedup.readDocStream(spark, feedDir, feedSchema)
+      StreamTwin.readDocStream(spark, feedDir, schema)
         .select(col("doc_id").as(s"event_$tag"), col("user_id").as(s"u_$tag"),
           expr("ts DIV 1000").as(s"ts_$tag"),
           timestamp_micros(expr("ts DIV 1000")).as(s"t_$tag"))
@@ -71,59 +64,37 @@ object StreamingRangeJoin {
     // The interval pair alone is the full predicate anyway: t_x =
     // timestamp_micros(ts_x) is order-isomorphic to the Long µs value,
     // so it IS |ts_a − ts_b| ≤ windowUs exactly. The `event_a <
-    // event_b` tie-break moves into the foreachBatch BODY (batch
-    // domain): a post-join .filter on the stream side gets pushed
-    // right back into the join condition by PushPredicateThroughJoin,
-    // re-creating the noise. State is per-INPUT-row, so buffering both
-    // orientations costs nothing extra; the batch filter drops the
-    // mirrored/self pairs before the sink.
-    val joined = side("a").join(side("b"),
+    // event_b` tie-break moves into the fold (batch domain): a
+    // post-join .filter on the stream side gets pushed right back into
+    // the join condition by PushPredicateThroughJoin, re-creating the
+    // noise. State is per-INPUT-row, so buffering both orientations
+    // costs nothing extra; the fold drops the mirrored/self pairs
+    // before the sink.
+    side("a").join(side("b"),
       col("u_a") === col("u_b") &&
         col("t_b") >= col("t_a") - expr(s"INTERVAL ${windowUs} MICROSECOND") &&
         col("t_b") <= col("t_a") + expr(s"INTERVAL ${windowUs} MICROSECOND"))
       .select(col("u_a").as("user_id"), col("event_a"), col("event_b"),
-        (col("ts_b") - col("ts_a")).as("gap_us"))
-    val query = joined.writeStream
-      .option("checkpointLocation", s"$warehouse/_range_checkpoint")
-      .foreachBatch { (b: DataFrame, _: Long) =>
-        val batch = b.filter(col("event_a") < col("event_b"))
-          .localCheckpoint()
-        if (!batch.isEmpty) {
-          val maxId = batch.agg(max(col("event_b"))).collect()(0).getLong(0)
-          ParquetSink.writeBatch(
-            batch.withColumn("block_height", col("event_b")),
-            path, maxId, pairPk)
-        }
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    query.awaitTermination()
+        (col("ts_b") - col("ts_a")).as("gap_us"), col("event_b").as("doc_id"))
   }
 
-  /** Declared query (`w_stream_range_join`): stream the events table
-    * through the watermarked two-stream join — two chunks, a
-    * mid-stream restart from the same checkpoint (join STATE restored,
-    * so stop-straddling pairs are found), then the full feed — and
-    * read the accumulated FINAL pair table. Equals the batch
-    * [[graft.queries.EventQueries.wRangeJoin]] and shares its oracle.
-    * Correctness-only: its cost is micro-batch orchestration, not data
-    * volume. */
-  def wStreamRangeJoin(spark: SparkSession, dir: String,
-      windowUs: Long = 3600000000L, nChunks: Int = 5): DataFrame = {
-    graft.Tables.tune(spark)
-    val feed = StreamingDedup.freshDir("range_feed")
-    val warehouse = StreamingDedup.freshDir("range_wh")
-    val evs = graft.Tables.events(spark, dir)
-      .select(col("event_id").as("doc_id"), col("ts"), col("user_id"))
-    StreamingDedup.writeDocChunks(spark, evs, feed, nChunks,
-      takeChunks = 2, schema = feedSchema)
-    runStream(spark, feed, warehouse, windowUs)
-    StreamingDedup.writeDocChunks(spark, evs, feed, nChunks,
-      schema = feedSchema)
-    runStream(spark, feed, warehouse, windowUs)
-    ParquetSink.readFinal(spark.read.parquet(s"$warehouse/range_pairs"),
-        pairPk)
-      .select(col("user_id"), col("event_a"), col("event_b"), col("gap_us"))
-      .orderBy(col("user_id"), col("event_a"), col("event_b"))
-  }
+  /** `w_stream_range_join`: the two-stream join, its pairs landed
+    * through the PK-FINAL sink and read back in the batch query's
+    * order. The restart splits the feed mid-stream (2 of 5 chunks
+    * first), so same-user pairs straddling the stop exist and are only
+    * findable through checkpoint-restored join state. */
+  val rangeJoin: Twin = Twin("w_stream_range_join", "w_range_join",
+    StreamingEventLog.eventSchema, StreamingEventLog.events,
+    (_, warehouse) => (batch, maxId) =>
+      ParquetSink.writeBatch(
+        batch.filter(col("event_a") < col("event_b")).drop("doc_id")
+          .withColumn("block_height", col("event_b")),
+        s"$warehouse/range_pairs", maxId, pairPk),
+    (spark, warehouse) =>
+      ParquetSink.readFinal(spark.read.parquet(s"$warehouse/range_pairs"),
+          pairPk)
+        .select(col("user_id"), col("event_a"), col("event_b"),
+          col("gap_us"))
+        .orderBy(col("user_id"), col("event_a"), col("event_b")),
+    source = joined)
 }

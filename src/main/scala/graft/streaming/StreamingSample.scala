@@ -2,10 +2,8 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types.{LongType, StringType, StructField,
   StructType}
-import graft.sink.ParquetSink
 
 /** Streaming twins for priority sampling (`t_stream_sample_priority`)
   * and the Pareto frontier (`t_stream_pareto`).
@@ -21,9 +19,9 @@ import graft.sink.ParquetSink
   * [[graft.llm.TextAnalysis.paretoFromPoints]]) run at read —
   * identical oracles to the batch twins, replay-idempotent by key.
   *
-  * Run shape: checkpointed file stream, two chunks, STOP, compaction,
-  * then the full feed against the same checkpoint (the mid-stream
-  * restart) — the suite additionally pins streamed ≡ batch at sf0.001.
+  * Both land their facts through THE fact log
+  * ([[StreamingEventLog.logFold]]) under the [[StreamTwin]] protocol,
+  * compacted between the waves.
   */
 object StreamingSample {
 
@@ -36,73 +34,28 @@ object StreamingSample {
     StructField("n_chars", LongType),
     StructField("n_tokens", LongType)))
 
-  /** Append-only doc-fact stream under PK FINAL (schema per twin). */
-  def runFactsStream(spark: SparkSession, feedDir: String,
-      warehouse: String,
-      schema: StructType = feedSchema): Unit = {
-    val path = s"$warehouse/sample_facts"
-    val query = StreamingDedup.readDocStream(spark, feedDir, schema)
-      .writeStream
-      .option("checkpointLocation", s"$warehouse/_facts_checkpoint")
-      .foreachBatch { (b: DataFrame, _: Long) =>
-        val batch = b.localCheckpoint()
-        if (!batch.isEmpty) {
-          val maxId = batch.agg(max(col("doc_id"))).collect()(0).getLong(0)
-          ParquetSink.writeBatch(
-            batch.withColumn("block_height", col("doc_id")),
-            path, maxId, Seq("doc_id"))
-        }
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    query.awaitTermination()
-  }
+  private def factTwin(name: String, batch: String, schema: StructType,
+      feed: (SparkSession, String) => DataFrame,
+      read: DataFrame => DataFrame): Twin =
+    Twin(name, batch, schema, feed, StreamingEventLog.logFold,
+      (spark, wh) => read(StreamingEventLog.readLog(spark, wh)),
+      between = StreamingEventLog.compactLog)
 
-  /** Declared query (`t_stream_sample_priority`) — equals the batch
-    * [[graft.llm.TextAnalysis.tSamplePriority]] and shares its oracle.
-    * Correctness-only: its cost is micro-batch orchestration. */
-  def tStreamSamplePriority(spark: SparkSession, dir: String,
-      nChunks: Int = 5): DataFrame = {
-    graft.Tables.tune(spark)
-    val feed = StreamingDedup.freshDir("sample_feed")
-    val warehouse = StreamingDedup.freshDir("sample_wh")
-    val facts = graft.Tables.documents(spark, dir)
-      .select(col("doc_id"), col("lang"), col("n_chars"))
-    StreamingDedup.writeDocChunks(spark, facts, feed, nChunks,
-      takeChunks = 2, schema = feedSchema)
-    runFactsStream(spark, feed, warehouse)
-    ParquetSink.compact(spark, s"$warehouse/sample_facts", Seq("doc_id"))
-    StreamingDedup.writeDocChunks(spark, facts, feed, nChunks,
-      schema = feedSchema)
-    runFactsStream(spark, feed, warehouse)
-    val log = ParquetSink.readFinal(
-      spark.read.parquet(s"$warehouse/sample_facts"), Seq("doc_id"))
-    graft.llm.TextAnalysis.samplePriorityFromFacts(
-      log.select(col("doc_id"), col("lang"), col("n_chars")))
-  }
+  /** `t_stream_sample_priority`: the shared bottom-k at read. */
+  val priority: Twin = factTwin("t_stream_sample_priority",
+    "t_sample_priority", feedSchema,
+    (spark, dir) => graft.Tables.documents(spark, dir)
+      .select(col("doc_id"), col("lang"), col("n_chars")),
+    log => graft.llm.TextAnalysis.samplePriorityFromFacts(
+      log.select(col("doc_id"), col("lang"), col("n_chars"))))
 
-  /** Declared query (`t_stream_pareto`) — equals the batch
-    * [[graft.llm.TextAnalysis.tParetoFrontier]] and shares its oracle.
-    * Correctness-only: its cost is micro-batch orchestration. */
-  def tStreamPareto(spark: SparkSession, dir: String,
-      nChunks: Int = 5): DataFrame = {
-    graft.Tables.tune(spark)
-    val feed = StreamingDedup.freshDir("pareto_feed")
-    val warehouse = StreamingDedup.freshDir("pareto_wh")
-    val facts = graft.Tables.documents(spark, dir)
+  /** `t_stream_pareto`: the shared skyline at read. */
+  val pareto: Twin = factTwin("t_stream_pareto", "t_pareto_frontier",
+    paretoSchema,
+    (spark, dir) => graft.Tables.documents(spark, dir)
       .select(col("doc_id"), col("n_chars"),
         size(graft.llm.TextAnalysis.tokens(col("text"))).cast("long")
-          .as("n_tokens"))
-    StreamingDedup.writeDocChunks(spark, facts, feed, nChunks,
-      takeChunks = 2, schema = paretoSchema)
-    runFactsStream(spark, feed, warehouse, paretoSchema)
-    ParquetSink.compact(spark, s"$warehouse/sample_facts", Seq("doc_id"))
-    StreamingDedup.writeDocChunks(spark, facts, feed, nChunks,
-      schema = paretoSchema)
-    runFactsStream(spark, feed, warehouse, paretoSchema)
-    val log = ParquetSink.readFinal(
-      spark.read.parquet(s"$warehouse/sample_facts"), Seq("doc_id"))
-    graft.llm.TextAnalysis.paretoFromPoints(
-      log.select(col("doc_id"), col("n_chars"), col("n_tokens")))
-  }
+          .as("n_tokens")),
+    log => graft.llm.TextAnalysis.paretoFromPoints(
+      log.select(col("doc_id"), col("n_chars"), col("n_tokens"))))
 }

@@ -1,8 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types.{LongType, StringType, StructField,
   StructType}
 import graft.sink.ParquetSink
@@ -29,49 +27,23 @@ object StreamingWeighted {
   private val gridKeys = Seq("lang", "value")
   private val gridSums = Seq("wsum")
 
-  /** Summing-MV stream for the per-(lang, value) weight histogram. */
-  def runHistStream(spark: SparkSession, feedDir: String,
-      warehouse: String): Unit = {
-    val path = s"$warehouse/weight_hist"
-    val query = StreamingDedup.readDocStream(spark, feedDir, feedSchema)
-      .writeStream
-      .option("checkpointLocation", s"$warehouse/_hist_checkpoint")
-      .foreachBatch { (b: DataFrame, _: Long) =>
-        val batch = b.localCheckpoint()
-        if (!batch.isEmpty) {
-          val maxId = batch.agg(max(col("doc_id"))).collect()(0).getLong(0)
-          val partial = graft.llm.TextAnalysis.weightHist(batch)
-            .withColumn("block_height", col("value"))
-          ParquetSink.writeSummedBatch(partial, path, maxId, gridKeys)
-        }
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    query.awaitTermination()
-  }
-
-  /** Declared query (`t_stream_weighted_percentiles`) — equals the
-    * batch [[graft.llm.TextAnalysis.tWeightedPercentiles]] and shares
-    * its oracle. Correctness-only: its cost is micro-batch
-    * orchestration. */
-  def tStreamWeightedPercentiles(spark: SparkSession, dir: String,
-      nChunks: Int = 5): DataFrame = {
-    graft.Tables.tune(spark)
-    val feed = StreamingDedup.freshDir("weighted_feed")
-    val warehouse = StreamingDedup.freshDir("weighted_wh")
-    val docs = graft.Tables.documents(spark, dir)
-      .select(col("doc_id"), col("text"), col("lang"), col("n_chars"))
-    StreamingDedup.writeDocChunks(spark, docs, feed, nChunks,
-      takeChunks = 2, schema = feedSchema)
-    runHistStream(spark, feed, warehouse)
-    ParquetSink.compactSummed(spark, s"$warehouse/weight_hist",
-      gridKeys, gridSums)
-    StreamingDedup.writeDocChunks(spark, docs, feed, nChunks,
-      schema = feedSchema)
-    runHistStream(spark, feed, warehouse)
-    val hist = ParquetSink.readSummed(
-      spark.read.parquet(s"$warehouse/weight_hist"), gridKeys, gridSums)
-      .select(col("lang"), col("value"), col("wsum"))
-    graft.llm.TextAnalysis.weightedPercentilesFromHist(hist)
-  }
+  /** `t_stream_weighted_percentiles`: the weight histogram as a
+    * summing MV (merged between the waves), the shared nearest-rank
+    * lookup at read. */
+  val percentiles: Twin = Twin("t_stream_weighted_percentiles",
+    "t_weighted_percentiles", feedSchema,
+    (spark, dir) => graft.Tables.documents(spark, dir)
+      .select(col("doc_id"), col("text"), col("lang"), col("n_chars")),
+    (_, warehouse) => (batch, maxId) =>
+      ParquetSink.writeSummedBatch(
+        graft.llm.TextAnalysis.weightHist(batch)
+          .withColumn("block_height", col("value")),
+        s"$warehouse/weight_hist", maxId, gridKeys),
+    (spark, warehouse) =>
+      graft.llm.TextAnalysis.weightedPercentilesFromHist(
+        ParquetSink.readSummed(
+          spark.read.parquet(s"$warehouse/weight_hist"), gridKeys, gridSums)
+          .select(col("lang"), col("value"), col("wsum"))),
+    between = (spark, wh) => ParquetSink.compactSummed(spark,
+      s"$wh/weight_hist", gridKeys, gridSums))
 }

@@ -24,88 +24,6 @@ class PlanAuditSpec extends AnyFunSuite {
   private lazy val spark = SharedSpark.spark
   private val dir = "/root/testdata/sf0.001"
 
-  /** Forced-broadcast budget per declared query: name → (max hints,
-    * marker columns identifying the bounded relations — every hint's
-    * child must expose at least one marker). Queries not listed get
-    * zero forced broadcasts. */
-  private val broadcastWhitelist: Map[String, (Int, Set[String])] = Map(
-    "q5_local_supplier" ->
-      ((2, Set("n_nationkey", "r_regionkey"))), // nation(25) + region(5)
-    "q9_product_profit" -> ((1, Set("n_nationkey"))), // nation(25)
-    "s_cosine_topk" -> ((1, Set("query_id"))), // ≤k query vectors by contract
-    "s_decontaminate" -> ((1, Set("probe_id"))), // bounded eval-probe set
-    // rrf fusion reuses sCosineTopk's ≤k-query broadcast verbatim
-    "t_rrf_fusion" -> ((1, Set("query_id"))),
-    "s_ann_ivf" -> ((1, Set("query_id"))), // ≤k query vectors by contract
-    "s_ann_kmeans" -> ((1, Set("query_id"))), // same bounded query set
-    "s_ann_lsh" -> ((1, Set("query_id"))), // same bounded query set
-    "s_ann_pq" -> ((1, Set("query_id"))), // same bounded query set (LUT side)
-    // the model-store apply twins run the SAME shared search bodies
-    "s_ann_kmeans_stored" -> ((1, Set("query_id"))),
-    "s_ann_pq_stored" -> ((1, Set("query_id"))),
-    // IVFADC: the same bounded probe-set broadcast (query fan-out ×
-    // nprobe rows, LUT + centroid-dot columns — still query-bounded)
-    "s_ann_ivfpq" -> ((1, Set("query_id"))),
-    "s_ann_ivfpq_stored" -> ((1, Set("query_id"))),
-    "s_ann_ivfpq_eps" -> ((1, Set("query_id"))), // same bounded probe set
-    "near_gold_metrics" -> ((1, Set("defuse_asset_id"))), // bounded assets dim
-    "near_sql_gold" -> ((1, Set("defuse_asset_id"))), // same view via spark.sql
-    "near_skew_gold" -> ((1, Set("defuse_asset_id"))), // same gold view, hot-key corpus
-    "t_tfidf_topk" -> ((1, Set("df"))), // document-frequency dim: vocab-bounded
-    // DSIR bucket model: exactly B=1024 (b, s) rows by construction
-    "t_dsir_weights" -> ((1, Set("s"))),
-    // the source-target path (r15): SAME body, same B=1024-row model
-    "t_dsir_target_source" -> ((1, Set("s"))),
-    "t_stream_dsir" -> ((1, Set("s"))),
-    "t_decontaminate" -> ((1, Set("shingle"))), // eval-set shingles: benchmark-bounded
-    "t_stratified_sample" -> ((1, Set("n_l"))), // per-language counts: language-bounded
-    "t_token_budget" -> ((1, Set("offset"))), // bucket offsets: 256 rows by construction
-    "t_seq_pack" -> ((1, Set("offset"))), // same 256-row offsets relation
-    "w_peak_concurrency" -> ((1, Set("offset"))), // day offsets: day-count-bounded
-    "w_interval_coverage" ->
-      // day offsets + next-day first points: both day-count-bounded
-      ((2, Set("offset", "next_first_us"))),
-    // the streamed event-log twin answers through the SAME shared
-    // sweep, so it inherits the same two day-bounded broadcasts
-    "w_stream_interval_coverage" ->
-      ((2, Set("offset", "next_first_us"))),
-    "t_dataset_card" -> ((1, Set("split_tokens"))), // per-split totals: ≤3 rows
-    "w_value_deciles" -> ((1, Set("bs"))), // boundary arrays: types × 9 rows
-    "q11_supplier_share" -> ((1, Set("total_dec"))), // global scalar: 1 row
-    "q2_min_cost_supplier" ->
-      // nation(25) + region(5); ×2 — the offers subtree (and its hints)
-      // appears under both the min-aggregate and the join-back branch
-      ((4, Set("n_nationkey", "r_regionkey"))),
-    "q7_volume_shipping" -> ((2, Set("s_nk", "c_nk"))), // nation twice (25)
-    "q8_market_share" ->
-      ((3, Set("n_nationkey", "r_regionkey", "s_nk"))), // nation×2 + region
-    "q15_top_supplier" -> ((1, Set("max_rev"))), // global scalar: 1 row
-    "q20_part_availability" ->
-      ((2, Set("n_nationkey", "r_regionkey"))), // nation(25) + region(5)
-    "q22_sales_opportunity" ->
-      ((2, Set("avg_bal", "n_nationkey"))), // 1-row scalar + nation(25)
-    "v_approx_quantiles" ->
-      ((2, Set("target_rn", "a"))), // 3-row probe sets off a 1-row agg
-    "g_event_transitions" ->
-      ((1, Set("from_total"))), // per-from-type totals: event-type-bounded
-    "s_knn_classify" ->
-      ((1, Set("probe_id"))), // fixed 64-probe query set by contract
-    // recall report composes the kmeans-IVF and brute-force top-k
-    // queries — one bounded query-set broadcast from each side
-    "s_ann_recall" -> ((2, Set("query_id"))),
-    // robust anomaly: the two type-bounded median relations (the
-    // med_count subtree repeats in the analyzed plan under the MAD
-    // branch before the cache kicks in)
-    "w_anomaly_mad" -> ((3, Set("med_count", "mad"))),
-    // RFM: the 1-row max-ts scalar off the cached user aggregates
-    // (subtree repeats in the analyzed plan) + the single 1-row
-    // boundary-map relation (metric -> 3-element array)
-    "w_rfm" -> ((13, Set("max_us", "bm")))
-  )
-
-  private def hints(df: DataFrame): Seq[ResolvedHint] =
-    df.queryExecution.analyzed.collect { case h: ResolvedHint => h }
-
   private def formatted(df: DataFrame): String =
     df.queryExecution.explainString(ExplainMode.fromString("formatted"))
 
@@ -386,37 +304,22 @@ class PlanAuditSpec extends AnyFunSuite {
     * round trips) — their returned plan is a plain parquet scan, and
     * executing the builder re-runs minutes of pipeline already covered
     * by their own suites. The audit covers the declarative queries.
+    * Every streaming twin is such a builder; [[TwinProperty.check]]
+    * audits each twin's READ plan over the warehouse it has already
+    * streamed, against the same budget.
     * `j_bucketed_orders` belongs here too (VERDICT r6 #4): its builder
     * DROPs and rewrites bucketed catalog tables, so a plan sweep must
     * not re-trigger the write — its plan shape (zero hash exchanges)
     * has its own dedicated test above. */
-  private val sideEffecting = Set("near_runner_events", "near_stream_events",
-    "near_sink_roundtrip", "near_sink_resume", "d_stream_minhash",
-    "d_stream_prefix", "d_stream_spans", "g_stream_retention",
-    "pipe_stream_clean",
-    "t_stream_dataset_card", "s_stream_ann_lsh", "w_stream_rolling_7d",
-    "t_stream_heavy_hitters", "w_stream_anomaly", "w_stream_range_join",
-    "j_bucketed_orders",
-    // builder writes tmp CSV/JSON copies before fingerprinting
-    "k_format_roundtrip",
-    // builder runs the full delete/replay/compact/resurrect sink
-    // scenario into a fresh tmpdir (ADVICE r11)
-    "k_tombstone_delete", "k_stream_tombstone", "w_stream_rfm",
-    "w_stream_anomaly_mad",
-    "t_stream_sample_priority", "t_stream_weighted_percentiles",
-    "w_stream_funnel", "t_stream_pareto",
-    // builders stream the event log into the maintained graph MV
-    "g_stream_pagerank", "g_stream_bfs", "g_stream_components",
-    // builder streams documents into the maintained pair MV
-    "d_stream_dup_groups",
-    // builder trains+stores the quantizer and streams the index MV
-    "s_stream_ann_kmeans",
-    // builder streams the corpus into the PK-FINAL vector index
-    "s_stream_decontaminate",
-    // builder streams docs into the PK-FINAL DSIR fact table
-    "t_stream_dsir",
-    // builder trains+stores the quantizer and streams the fact table
-    "s_stream_prune")
+  private val sideEffecting: String => Boolean =
+    name => graft.streaming.StreamTwin.byName.contains(name) || Set(
+      "near_runner_events", "near_stream_events", "near_sink_roundtrip",
+      "near_sink_resume", "j_bucketed_orders",
+      // builder writes tmp CSV/JSON copies before fingerprinting
+      "k_format_roundtrip",
+      // builder runs the full delete/replay/compact/resurrect sink
+      // scenario into a fresh tmpdir (ADVICE r11)
+      "k_tombstone_delete")(name)
 
   test("no declared query plans a CartesianProduct, and forced broadcasts stay on bounded relations") {
     graft.Tables.tune(spark)
@@ -430,20 +333,7 @@ class PlanAuditSpec extends AnyFunSuite {
             failures += s"$name: failed to build plan: ${e.getClass.getSimpleName} ${e.getMessage}"
             null
         }
-      if (df != null) {
-        val physical = df.queryExecution.executedPlan.toString
-        if (physical.contains("CartesianProduct"))
-          failures += s"$name: CartesianProduct in physical plan"
-        val hs = hints(df)
-        val (maxAllowed, markers) =
-          broadcastWhitelist.getOrElse(name, (0, Set.empty[String]))
-        if (hs.size > maxAllowed)
-          failures += s"$name: ${hs.size} forced broadcast hints (allowed $maxAllowed)"
-        else if (hs.nonEmpty &&
-            !hs.forall(_.child.output.exists(a => markers.contains(a.name))))
-          failures += s"$name: a broadcast hint sits on a relation exposing " +
-            s"none of ${markers.mkString("{", ",", "}")} — not a whitelisted bounded dim"
-      }
+      if (df != null) failures ++= PlanAuditSpec.faults(name, df, name)
       // honor the cache CONTRACT, not just the cache: releaseAll also
       // runs onRelease cleanups (the lazy model-store/bucketed-table
       // deletions) — clearCache alone leaked one store dir per sweep
@@ -451,5 +341,107 @@ class PlanAuditSpec extends AnyFunSuite {
       spark.catalog.clearCache()
     }
     assert(failures.isEmpty, failures.mkString("\n"))
+  }
+}
+
+object PlanAuditSpec {
+  /** Forced-broadcast budget per declared query: name → (max hints,
+    * marker columns identifying the bounded relations — every hint's
+    * child must expose at least one marker). Queries not listed get
+    * zero forced broadcasts. A streaming twin reads through its batch
+    * query's body, so it is held to its batch query's row. */
+  val broadcastWhitelist: Map[String, (Int, Set[String])] = Map(
+    "q5_local_supplier" ->
+      ((2, Set("n_nationkey", "r_regionkey"))), // nation(25) + region(5)
+    "q9_product_profit" -> ((1, Set("n_nationkey"))), // nation(25)
+    "s_cosine_topk" -> ((1, Set("query_id"))), // ≤k query vectors by contract
+    "s_decontaminate" -> ((1, Set("probe_id"))), // bounded eval-probe set
+    // rrf fusion reuses sCosineTopk's ≤k-query broadcast verbatim
+    "t_rrf_fusion" -> ((1, Set("query_id"))),
+    "s_ann_ivf" -> ((1, Set("query_id"))), // ≤k query vectors by contract
+    "s_ann_kmeans" -> ((1, Set("query_id"))), // same bounded query set
+    "s_ann_lsh" -> ((1, Set("query_id"))), // same bounded query set
+    "s_ann_pq" -> ((1, Set("query_id"))), // same bounded query set (LUT side)
+    // the model-store apply twins run the SAME shared search bodies
+    "s_ann_kmeans_stored" -> ((1, Set("query_id"))),
+    "s_ann_pq_stored" -> ((1, Set("query_id"))),
+    // IVFADC: the same bounded probe-set broadcast (query fan-out ×
+    // nprobe rows, LUT + centroid-dot columns — still query-bounded)
+    "s_ann_ivfpq" -> ((1, Set("query_id"))),
+    "s_ann_ivfpq_stored" -> ((1, Set("query_id"))),
+    "s_ann_ivfpq_eps" -> ((1, Set("query_id"))), // same bounded probe set
+    "near_gold_metrics" -> ((1, Set("defuse_asset_id"))), // bounded assets dim
+    "near_sql_gold" -> ((1, Set("defuse_asset_id"))), // same view via spark.sql
+    "near_skew_gold" -> ((1, Set("defuse_asset_id"))), // same gold view, hot-key corpus
+    "t_tfidf_topk" -> ((1, Set("df"))), // document-frequency dim: vocab-bounded
+    // DSIR bucket model: exactly B=1024 (b, s) rows by construction
+    "t_dsir_weights" -> ((1, Set("s"))),
+    // the source-target path (r15): SAME body, same B=1024-row model
+    "t_dsir_target_source" -> ((1, Set("s"))),
+    "t_decontaminate" -> ((1, Set("shingle"))), // eval-set shingles: benchmark-bounded
+    "t_stratified_sample" -> ((1, Set("n_l"))), // per-language counts: language-bounded
+    "t_token_budget" -> ((1, Set("offset"))), // bucket offsets: 256 rows by construction
+    "t_seq_pack" -> ((1, Set("offset"))), // same 256-row offsets relation
+    "w_peak_concurrency" -> ((1, Set("offset"))), // day offsets: day-count-bounded
+    "w_interval_coverage" ->
+      // day offsets + next-day first points: both day-count-bounded
+      ((2, Set("offset", "next_first_us"))),
+    "t_dataset_card" -> ((1, Set("split_tokens"))), // per-split totals: ≤3 rows
+    "w_value_deciles" -> ((1, Set("bs"))), // boundary arrays: types × 9 rows
+    "q11_supplier_share" -> ((1, Set("total_dec"))), // global scalar: 1 row
+    "q2_min_cost_supplier" ->
+      // nation(25) + region(5); ×2 — the offers subtree (and its hints)
+      // appears under both the min-aggregate and the join-back branch
+      ((4, Set("n_nationkey", "r_regionkey"))),
+    "q7_volume_shipping" -> ((2, Set("s_nk", "c_nk"))), // nation twice (25)
+    "q8_market_share" ->
+      ((3, Set("n_nationkey", "r_regionkey", "s_nk"))), // nation×2 + region
+    "q15_top_supplier" -> ((1, Set("max_rev"))), // global scalar: 1 row
+    "q20_part_availability" ->
+      ((2, Set("n_nationkey", "r_regionkey"))), // nation(25) + region(5)
+    "q22_sales_opportunity" ->
+      ((2, Set("avg_bal", "n_nationkey"))), // 1-row scalar + nation(25)
+    "v_approx_quantiles" ->
+      ((2, Set("target_rn", "a"))), // 3-row probe sets off a 1-row agg
+    "g_event_transitions" ->
+      ((1, Set("from_total"))), // per-from-type totals: event-type-bounded
+    "s_knn_classify" ->
+      ((1, Set("probe_id"))), // fixed 64-probe query set by contract
+    // recall report composes the kmeans-IVF and brute-force top-k
+    // queries — one bounded query-set broadcast from each side
+    "s_ann_recall" -> ((2, Set("query_id"))),
+    // robust anomaly: the two type-bounded median relations (the
+    // med_count subtree repeats in the analyzed plan under the MAD
+    // branch before the cache kicks in)
+    "w_anomaly_mad" -> ((3, Set("med_count", "mad"))),
+    // RFM: the 1-row max-ts scalar off the cached user aggregates
+    // (subtree repeats in the analyzed plan) + the single 1-row
+    // boundary-map relation (metric -> 3-element array)
+    "w_rfm" -> ((13, Set("max_us", "bm")))
+  )
+
+  private def hints(df: DataFrame): Seq[ResolvedHint] =
+    df.queryExecution.analyzed.collect { case h: ResolvedHint => h }
+
+  /** The plan faults of declared query `name`, planned as `df`: a
+    * `CartesianProduct`, more forced broadcasts than the budget of
+    * `budget` (the query itself, or the batch query a streaming twin
+    * answers through the same shared body), or a hint on a relation
+    * exposing none of its markers. */
+  def faults(name: String, df: DataFrame,
+      budget: String): Seq[String] = {
+    val out = Seq.newBuilder[String]
+    if (df.queryExecution.executedPlan.toString.contains("CartesianProduct"))
+      out += s"$name: CartesianProduct in physical plan"
+    val hs = hints(df)
+    val (maxAllowed, markers) =
+      broadcastWhitelist.getOrElse(budget, (0, Set.empty[String]))
+    if (hs.size > maxAllowed)
+      out += s"$name: ${hs.size} forced broadcast hints (allowed $maxAllowed)"
+    else if (hs.nonEmpty &&
+        !hs.forall(_.child.output.exists(a => markers.contains(a.name))))
+      out += s"$name: a broadcast hint sits on a relation exposing " +
+        s"none of ${markers.mkString("{", ",", "}")} — not a whitelisted bounded dim"
+    out.result()
   }
 }

@@ -236,15 +236,6 @@ class Round12Spec extends AnyFunSuite {
     assert(got === expected)
   }
 
-  test("streaming MAD anomaly twin (summed daily grid MV, mid-stream " +
-      "restart + compaction) equals the batch robust detector") {
-    val streamed = graft.streaming.StreamingAnomaly
-      .wStreamAnomalyMad(spark, dir)
-      .collect().map(_.toString).toSeq
-    val batch = EventQueries.wAnomalyMad(spark, dir)
-      .collect().map(_.toString).toSeq
-    assert(streamed === batch)
-  }
 
   // ---------------- multi-source BFS ----------------------------------
 
@@ -315,29 +306,7 @@ class Round12Spec extends AnyFunSuite {
     assert(got.map(_._3).sum > 0)
   }
 
-  // ---------------- streaming RFM twin --------------------------------
-
-  test("streaming RFM twin (PK-FINAL purchase log, mid-stream restart " +
-      "+ compaction) equals the batch segmentation") {
-    val streamed = graft.streaming.StreamingEventLog
-      .wStreamRfm(spark, dir)
-      .collect().map(_.toString).toSeq
-    val batch = EventQueries.wRfm(spark, dir)
-      .collect().map(_.toString).toSeq
-    assert(streamed === batch)
-    assert(streamed.nonEmpty)
-  }
-
-  // ---------------- streaming tombstone twin -------------------------
-
-  test("streaming tombstone twin (checkpointed mid-stream restart + " +
-      "compaction) equals the batch sink scenario") {
-    val streamed = graft.streaming.StreamingEventLog
-      .kStreamTombstone(spark, dir)
-      .collect().map(_.toString).toSeq
-    val batch = EventQueries.kTombstoneDelete(spark, dir)
-      .collect().map(_.toString).toSeq
-    assert(streamed === batch)
-    assert(streamed.nonEmpty)
+  TwinProperty.tests("Round12Spec").foreach { case (title, twins) =>
+    test(title)(twins.foreach(TwinProperty.check(spark, _)))
   }
 }

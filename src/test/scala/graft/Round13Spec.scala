@@ -17,8 +17,10 @@ class Round13Spec extends AnyFunSuite {
   test("streamed edge MV == batch snapshot, and the shared from-edges " +
       "BFS/triangle bodies agree over either build") {
     graft.Tables.tune(spark)
-    val streamed = graft.streaming.StreamingGraph
-      .streamedEdges(spark, dir, nChunks = 5).localCheckpoint()
+    import graft.streaming.{StreamTwin, StreamingGraph}
+    val streamed = StreamingGraph.edgesTable(spark,
+      StreamTwin.stream(spark, StreamingGraph.pagerank, dir).warehouse)
+      .localCheckpoint()
     val batch = CoOccurrenceMv.edgesFromCounts(
       CoOccurrenceMv.pairCounts(
         CoOccurrenceMv.occupancy(graft.Tables.events(spark, dir))))

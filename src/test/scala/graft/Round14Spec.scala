@@ -69,15 +69,6 @@ class Round14Spec extends AnyFunSuite {
     QueryCaches.releaseAll()
   }
 
-  test("streamed decontamination census over the accumulated index " +
-      "equals the batch snapshot report") {
-    graft.Tables.tune(spark)
-    val batch = Similarity.sDecontaminate(spark, dir)
-      .collect().map(_.toString).toSeq
-    val streamed = graft.streaming.StreamingAnnIndex
-      .sStreamDecontaminate(spark, dir).collect().map(_.toString).toSeq
-    assert(streamed === batch && streamed.nonEmpty)
-  }
 
   test("SessionMv: a snapshot is pinned to the session's view of its " +
       "inputs — stale after source mutation, rebuilt after refreshAll") {
@@ -220,5 +211,9 @@ class Round14Spec extends AnyFunSuite {
           java.lang.Double.doubleToLongBits(v(i) - c(i)))
       }
     }
+  }
+
+  TwinProperty.tests("Round14Spec").foreach { case (title, twins) =>
+    test(title)(twins.foreach(TwinProperty.check(spark, _)))
   }
 }

@@ -5,8 +5,9 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.llm.Similarity
 
 /** Round-16 pins: ε-boundary multi-assignment for the IVF family
-  * (VERDICT r15 #6) and the per-JVM scratch-dir isolation that the
-  * round's concurrent-replay incident forced. */
+  * (VERDICT r15 #6) and the scratch-dir isolation that the round's
+  * concurrent-replay incident forced (per JVM, and since then per
+  * invocation). */
 class Round16Spec extends AnyFunSuite {
   private lazy val spark = SharedSpark.spark
   private val dir = "/root/testdata/sf0.001"
@@ -76,19 +77,32 @@ class Round16Spec extends AnyFunSuite {
       stored.collect().map(_.toString).toSeq)
   }
 
-  test("scratch dirs are per-JVM (pid-scoped) and per-name stable " +
-      "within the JVM — the round-16 concurrent-replay isolation") {
-    val a = graft.sink.ParquetSink.scratchDir("spec_probe")
-    val b = graft.sink.ParquetSink.scratchDir("spec_probe")
-    assert(a === b, "same name, same JVM, same path")
+  test("scratch dirs are per-invocation: the same name twice gives two " +
+      "distinct pid-scoped paths, each emptied on entry") {
+    import graft.sink.ParquetSink
+    val a = ParquetSink.scratchDir("spec_probe")
+    val b = ParquetSink.scratchDir("spec_probe")
+    assert(a !== b, "same name, same JVM: still a new dir per call")
     val pid = ProcessHandle.current().pid()
-    assert(a.contains(s"graft_sink_${pid}_spec_probe"),
-      s"path must carry the pid: $a")
-    // emptied on entry: leave a file, re-enter, gone
-    val f = new java.io.File(a, "leftover")
-    new java.io.File(a).mkdirs()
-    java.nio.file.Files.writeString(f.toPath, "x")
-    graft.sink.ParquetSink.scratchDir("spec_probe")
-    assert(!f.exists(), "scratchDir must empty the dir on entry")
+    Seq(a, b).foreach(p => assert(
+      new java.io.File(p).getName.startsWith(s"graft_sink_${pid}_spec_probe_"),
+      s"path must carry the pid and the name: $p"))
+    assert(!new java.io.File(a).exists() && !new java.io.File(b).exists(),
+      "a scratch dir starts empty")
+  }
+
+  test("a held twin result survives a sibling twin that named the same " +
+      "scratch dir") {
+    // d_stream_minhash's lazy plan reads its warehouse at collect();
+    // d_stream_dup_groups streams the same pair MV — with name-scoped
+    // scratch it wiped that warehouse on entry and the held collect
+    // failed on the deleted files
+    val held = SparkEntry.queries("d_stream_minhash")(spark, dir)
+    SparkEntry.queries("d_stream_dup_groups")(spark, dir).collect()
+    val rows = held.collect().map(_.toString).toSeq
+    val batch = SparkEntry.queries("d_minhash_pairs")(spark, dir)
+      .collect().map(_.toString).toSeq
+    QueryCaches.releaseAll()
+    assert(rows.nonEmpty && rows === batch)
   }
 }

@@ -63,4 +63,46 @@ class Round18Spec extends AnyFunSuite {
     assert(!out.queryExecution.analyzed.toString
       .contains("RepartitionByExpression"))
   }
+
+  test("a Verify dump that throws leaves a .FAILED marker with the error, " +
+      "and a stale result directory never survives a re-dump") {
+    val out = graft.sink.ParquetSink.scratchDir("verify_dump")
+    assert(Verify.dump(out, "ok", () => spark.range(3).toDF("id")))
+    assert(new java.io.File(out, "ok").isDirectory)
+    assert(!Verify.dump(out, "ok",
+      () => throw new IllegalStateException("boom")))
+    assert(!new java.io.File(out, "ok").exists(),
+      "the earlier run's result must not pass for the failed one")
+    val marker = java.nio.file.Paths.get(out, "ok.FAILED")
+    assert(java.nio.file.Files.readString(marker).contains("boom"))
+    assert(Verify.dump(out, "ok", () => spark.range(3).toDF("id")))
+    assert(!java.nio.file.Files.exists(marker), "a passing re-dump clears it")
+  }
+
+  test("the bench stdout line stays under PIPE_BUF for all bench names at " +
+      "worst-case widths, in any default locale") {
+    val names = SparkEntry.queries.keys.filterNot(SparkEntry.correctnessOnly)
+      .toSeq.sorted
+    assert(names.size === 153)
+    val prev = java.util.Locale.getDefault
+    java.util.Locale.setDefault(java.util.Locale.GERMANY)
+    try {
+      def line(failed: Seq[String], suspects: Seq[String]) =
+        Bench.contractLine(987654.321, 987654.321, failed, suspects,
+          987654.321, Int.MaxValue, 987654.321, Int.MaxValue, Int.MaxValue,
+          987.654, 987.654, 987.654, 987.654, true, "data/sf0.1",
+          "BENCH_DETAIL_c32.json")
+      val few = line(names.take(2), names.take(5))
+      assert(few.contains("\"suspects\":[\"" + names.head))
+      assert(few.contains("\"names_truncated\":false"))
+      val worst = line(names :+ "ingest_blocks_per_sec", names)
+      assert(worst.getBytes("UTF-8").length < Bench.PipeBuf,
+        s"${worst.length} bytes")
+      assert(worst.contains("\"n_suspects\":153") &&
+        worst.contains("\"names_truncated\":true"))
+      // a comma-decimal default locale must not leak into the JSON
+      assert(Bench.ms3(1234.5) === "1234.5" && Bench.ms3(0.0004) === "0")
+      assert(few.contains("\"value\":987654.321,"))
+    } finally java.util.Locale.setDefault(prev)
+  }
 }

@@ -237,76 +237,6 @@ class StreamingSpec extends AnyFunSuite {
     assert(streamed === batch)
   }
 
-  test("streaming dedup (checkpointed, mid-stream restart) accumulates " +
-    "exactly the batch near-dup pairs") {
-    import graft.streaming.StreamingDedup
-    val dir = "/root/testdata/sf0.001"
-    // dStreamMinhash itself drives the full product shape: chunked
-    // feed, Trigger.AvailableNow stream with a checkpoint, a stop
-    // after two chunks, then a resumed run over the full feed
-    val streamed = StreamingDedup.dStreamMinhash(spark, dir)
-      .collect().map(_.toString).sorted.toSeq
-    val batch = graft.llm.Dedup.dMinhashPairs(spark, dir)
-      .collect().map(_.toString).sorted.toSeq
-    assert(streamed === batch)
-    assert(streamed.nonEmpty)
-  }
-
-  test("streaming prefix join (checkpointed, mid-stream restart) " +
-    "accumulates exactly the batch prefix pairs") {
-    val dir = "/root/testdata/sf0.001"
-    // same full product shape as the minhash twin: chunked feed,
-    // checkpointed Trigger.AvailableNow, stop after two chunks, resume
-    // over the full feed. Output must equal the BATCH prefix join —
-    // recall 1 survives the per-batch rarity order by the one-sided
-    // prefix theorem (StreamingPrefix scaladoc), and the exact verify
-    // is byte-shared, so equality is bitwise.
-    val streamed = graft.streaming.StreamingPrefix.dStreamPrefix(spark, dir)
-      .collect().map(_.toString).sorted.toSeq
-    val batch = graft.llm.Dedup.dPrefixPairs(spark, dir)
-      .collect().map(_.toString).sorted.toSeq
-    graft.QueryCaches.releaseAll() // dPrefixPairs' tracked persist
-    assert(streamed === batch)
-    assert(streamed.nonEmpty)
-  }
-
-  test("streaming span index (checkpointed, mid-stream restart) answers " +
-    "the duplicated-span report exactly like the batch pass") {
-    val dir = "/root/testdata/sf0.001"
-    // the substring family's incremental contract: per-doc span results
-    // are NOT append-only (a later doc can extend an earlier doc's
-    // spans), so the MV maintains only the append-only window INDEX and
-    // the span aggregation runs at read over the accumulated index —
-    // through the SAME spansFromWindows implementation as the batch
-    // query, making equality bitwise by construction of the index alone
-    val streamedRows =
-      graft.streaming.StreamingSpans.dStreamSpans(spark, dir).collect()
-    val streamed = streamedRows.map(_.toString).sorted.toSeq
-    val batch = graft.llm.Dedup.dDupSpans(spark, dir)
-      .collect().map(_.toString).sorted.toSeq
-    graft.QueryCaches.releaseAll() // dDupSpans' tracked persist
-    assert(streamed === batch)
-    // the interesting rows survived the trip: multi-span docs exist
-    assert(streamedRows.count(_.getLong(3) >= 2) > 0)
-  }
-
-  test("streaming retention MV (checkpointed, mid-stream restart) " +
-    "answers the cohort matrix exactly like the batch scan") {
-    val dir = "/root/testdata/sf0.001"
-    // the cohort REPORT is not append-only (a late earlier event moves
-    // a user's whole cohort row), but the distinct (user, day) activity
-    // SET is — PK-FINAL idempotent, min() over it order-free — so the
-    // MV accumulates activity facts and aggregates at read through the
-    // same retentionFromActivity as the batch query
-    val streamed =
-      graft.streaming.StreamingRetention.gStreamRetention(spark, dir)
-        .collect().map(_.toString).sorted.toSeq
-    val batch = graft.queries.EventQueries.gRetentionCohorts(spark, dir)
-      .collect().map(_.toString).sorted.toSeq
-    assert(streamed === batch)
-    assert(streamed.nonEmpty)
-  }
-
   test("soak: randomized restarts, checkpoint wipes, and mid-cascade " +
     "kills converge to the one-shot warehouse", Slow) {
     // VERDICT r6 #10: the crash-recovery analog of the reference's
@@ -384,280 +314,29 @@ class StreamingSpec extends AnyFunSuite {
     }
   }
 
-  test("streaming ANN index (checkpointed, mid-stream restart) answers " +
-    "the probe set identically to the batch index") {
-    val dir = "/root/testdata/sf0.001"
-    // sStreamAnnLsh drives the full product shape: chunked vector feed,
-    // checkpointed stream building the bucket table, a stop after two
-    // chunks, a resumed run over the full feed, then the SAME search
-    // as the batch query over the streamed index
-    val streamed = graft.streaming.StreamingAnnIndex
-      .sStreamAnnLsh(spark, dir)
-      .collect().map(_.toString).toSeq
-    val batch = graft.llm.Similarity.sAnnLsh(spark, dir)
-      .collect().map(_.toString).toSeq
-    assert(streamed === batch) // identical rows, order, and doubles
-    assert(streamed.nonEmpty)
-  }
-
-  test("streaming dataset card (restart + mid-sequence merge) equals the " +
-    "batch card exactly") {
-    val dir = "/root/testdata/sf0.001"
-    val streamed = graft.streaming.StreamingDatasetCard
-      .tStreamDatasetCard(spark, dir)
-      .collect().map(_.toString).toSeq
-    val batch = graft.llm.TextAnalysis.tDatasetCard(spark, dir)
-      .collect().map(_.toString).toSeq
-    assert(streamed === batch) // identical rows, order, and doubles
-  }
-
-  test("streaming priority sample (restart + mid-sequence compaction) " +
-    "equals the batch bottom-k exactly") {
-    val dir = "/root/testdata/sf0.001"
-    val streamed = graft.streaming.StreamingSample
-      .tStreamSamplePriority(spark, dir)
-      .collect().map(_.toString).toSeq
-    val batch = graft.llm.TextAnalysis.tSamplePriority(spark, dir)
-      .collect().map(_.toString).toSeq
-    assert(streamed === batch) // identical rows, order, and doubles
-    assert(streamed.nonEmpty)
-  }
-
-  test("streaming pareto frontier (restart + mid-sequence compaction) " +
-    "equals the batch skyline exactly") {
-    val dir = "/root/testdata/sf0.001"
-    val streamed = graft.streaming.StreamingSample
-      .tStreamPareto(spark, dir)
-      .collect().map(_.toString).toSeq
-    val batch = graft.llm.TextAnalysis.tParetoFrontier(spark, dir)
-      .collect().map(_.toString).toSeq
-    assert(streamed === batch) // identical rows and order
-    assert(streamed.nonEmpty)
-  }
-
-  test("streaming funnel (restart + mid-sequence compaction) equals " +
-    "the batch windowed funnel exactly") {
-    val dir = "/root/testdata/sf0.001"
-    val streamed = graft.streaming.StreamingEventLog
-      .wStreamFunnel(spark, dir)
-      .collect().map(_.toString).toSeq
-    val batch = graft.queries.EventQueries.wFunnelSteps(spark, dir)
-      .collect().map(_.toString).toSeq
-    assert(streamed === batch) // identical rows, order, and doubles
-    assert(streamed.nonEmpty)
-  }
-
-  test("streaming weighted percentiles (restart + mid-sequence merge) " +
-    "equals the batch nearest-rank lookup exactly") {
-    val dir = "/root/testdata/sf0.001"
-    val streamed = graft.streaming.StreamingWeighted
-      .tStreamWeightedPercentiles(spark, dir)
-      .collect().map(_.toString).toSeq
-    val batch = graft.llm.TextAnalysis.tWeightedPercentiles(spark, dir)
-      .collect().map(_.toString).toSeq
-    graft.QueryCaches.releaseAll()
-    assert(streamed === batch) // identical rows, order, and values
-    assert(streamed.nonEmpty)
-  }
-
-  test("streaming heavy hitters (restart + mid-sequence merge) equals " +
-    "the batch CMS-pruned query exactly") {
-    val dir = "/root/testdata/sf0.001"
-    val streamed = graft.streaming.StreamingHeavyHitters
-      .tStreamHeavyHitters(spark, dir)
-      .collect().map(_.toString).toSeq
-    val batch = graft.llm.TextAnalysis.tHeavyHitters(spark, dir)
-      .collect().map(_.toString).toSeq
-    assert(streamed === batch) // identical rows, order, and counts
-    assert(streamed.nonEmpty)
-  }
-
-  test("streaming anomaly grid (restart + mid-sequence merge) flags " +
-    "exactly the batch detector's days") {
-    val dir = "/root/testdata/sf0.001"
-    val streamed = graft.streaming.StreamingAnomaly
-      .wStreamAnomaly(spark, dir)
-      .collect().map(_.toString).toSeq
-    val batch = graft.queries.EventQueries.wAnomalyZscore(spark, dir)
-      .collect().map(_.toString).toSeq
-    assert(streamed === batch) // identical rows, order, and moments
-    assert(streamed.nonEmpty)
-  }
-
-  test("streaming gap-fill grid / SCD2 log / interval-coverage log " +
-    "(each checkpointed, mid-stream restart + compaction) equal their " +
-    "batch twins row for row") {
-    val dir = "/root/testdata/sf0.001"
-    import graft.streaming.StreamingEventLog
-    import graft.queries.EventQueries
-    def rows(df: org.apache.spark.sql.DataFrame): Seq[String] =
-      df.collect().map(_.toString).toSeq
-    val gf = rows(StreamingEventLog.wStreamGapFill(spark, dir))
-    assert(gf === rows(EventQueries.wGapFill(spark, dir)))
-    assert(gf.nonEmpty)
-    val scd = rows(StreamingEventLog.kStreamScd2(spark, dir))
-    assert(scd === rows(EventQueries.kScd2History(spark, dir)))
-    assert(scd.nonEmpty)
-    val cov = rows(StreamingEventLog.wStreamIntervalCoverage(spark, dir))
-    assert(cov === rows(EventQueries.wIntervalCoverage(spark, dir)))
-    assert(cov.nonEmpty)
-  }
-
-  test("streaming LM score (model summing MVs + PK-FINAL trigram facts, " +
-    "checkpointed mid-stream restart + compaction) equals the batch " +
-    "scorer row for row") {
-    val dir = "/root/testdata/sf0.001"
-    val streamed = graft.streaming.StreamingLmScore
-      .tStreamLmScore(spark, dir)
-      .collect().map(_.toString).toSeq
-    val batch = graft.llm.TextAnalysis.tLmScore(spark, dir)
-      .collect().map(_.toString).toSeq
-    graft.QueryCaches.releaseAll()
-    assert(streamed === batch) // identical rows, order, and doubles
-    assert(streamed.nonEmpty)
-  }
-
-  test("streaming active users (the retention activity MV, mid-stream " +
-    "restart + compaction) equals the batch DAU/WAU row for row") {
-    val dir = "/root/testdata/sf0.001"
-    val streamed = graft.streaming.StreamingRetention
-      .wStreamActiveUsers(spark, dir)
-      .collect().map(_.toString).toSeq
-    val batch = graft.queries.EventQueries.wActiveUsers(spark, dir)
-      .collect().map(_.toString).toSeq
-    graft.QueryCaches.releaseAll()
-    assert(streamed === batch)
-    assert(streamed.nonEmpty)
-  }
-
   test("heavy-hitter and anomaly MV soak: randomized chunk waves with a " +
     "restart per wave and random merges converge to the batch answers", Slow) {
-    // the rolling-grid soak discipline applied to this round's two
-    // summing MVs: whatever the arrival/restart/merge schedule, the
-    // threshold reads must equal the one-shot batch queries
-    import graft.streaming.{StreamingAnomaly, StreamingDedup,
-      StreamingHeavyHitters}
-    import graft.sink.ParquetSink
-    import org.apache.spark.sql.types.{DoubleType, LongType, StringType,
-      StructField, StructType}
-    def tmp(name: String): String = {
-      val d = new java.io.File(
-        System.getProperty("java.io.tmpdir"), s"graft_test_$name")
-      ParquetSink.delete(d)
-      d.getAbsolutePath
-    }
-    val dir = "/root/testdata/sf0.001"
-    val nChunks = 6
-    val batchHH = graft.llm.TextAnalysis.tHeavyHitters(spark, dir)
-      .collect().map(_.toString).toSeq
-    val batchAn = graft.queries.EventQueries.wAnomalyZscore(spark, dir)
-      .collect().map(_.toString).toSeq
-    val hhSchema = StructType(Seq(
-      StructField("doc_id", LongType), StructField("text", StringType)))
-    val evSchema = StructType(Seq(
-      StructField("doc_id", LongType), StructField("ts", LongType),
-      StructField("event_type", StringType),
-      StructField("value", DoubleType)))
+    // whatever the arrival/restart/merge schedule, the threshold reads
+    // of the two summing MVs must equal the one-shot batch queries
     (0 until 2).foreach { round =>
       val rnd = new scala.util.Random(6400 + round)
-      val cuts = (Seq(nChunks) ++
-        Seq.fill(3)(1 + rnd.nextInt(nChunks))).distinct.sorted
-
-      val feedH = tmp(s"hhsoak_feed$round")
-      val whH = tmp(s"hhsoak_wh$round")
-      val docs = Tables.documents(spark, dir).select("doc_id", "text")
-      cuts.foreach { take =>
-        StreamingDedup.writeDocChunks(spark, docs, feedH, nChunks, take,
-          schema = hhSchema)
-        StreamingHeavyHitters.runStream(spark, feedH, whH)
-        if (rnd.nextBoolean())
-          ParquetSink.compactSummed(spark, s"$whH/vocab_summed",
-            Seq("token"), Seq("tf"))
+      val cuts = soakCuts(rnd)
+      Seq("t_stream_heavy_hitters", "w_stream_anomaly").foreach { name =>
+        assert(soak(name, cuts, () => rnd.nextBoolean()) === batchRows(name),
+          s"$name soak round $round diverged")
       }
-      val gotHH = StreamingHeavyHitters.readHeavyHitters(spark, whH)
-        .collect().map(_.toString).toSeq
-      assert(gotHH === batchHH, s"heavy-hitter soak round $round diverged")
-
-      val feedA = tmp(s"ansoak_feed$round")
-      val whA = tmp(s"ansoak_wh$round")
-      val evs = Tables.events(spark, dir)
-        .select(col("event_id").as("doc_id"), col("ts"), col("event_type"),
-          col("value"))
-      cuts.foreach { take =>
-        StreamingDedup.writeDocChunks(spark, evs, feedA, nChunks, take,
-          schema = evSchema)
-        StreamingAnomaly.runStream(spark, feedA, whA)
-        if (rnd.nextBoolean())
-          ParquetSink.compactSummed(spark, s"$whA/anomaly_summed",
-            Seq("event_type", "epoch_day"), Seq("day_count"))
-      }
-      val gotAn = StreamingAnomaly.readAnomalies(spark, whA)
-        .collect().map(_.toString).toSeq
-      assert(gotAn === batchAn, s"anomaly soak round $round diverged")
     }
-  }
-
-  test("stream-stream interval join (watermarked, restart restores the " +
-    "symmetric join state) equals the batch range join exactly") {
-    val dir = "/root/testdata/sf0.001"
-    val streamed = graft.streaming.StreamingRangeJoin
-      .wStreamRangeJoin(spark, dir)
-      .collect().map(_.toString).toSeq
-    val batch = graft.queries.EventQueries.wRangeJoin(spark, dir)
-      .collect().map(_.toString).toSeq
-    assert(streamed === batch)
-    assert(streamed.nonEmpty)
-    // the restart genuinely splits the feed mid-stream (2 of 5 chunks
-    // first), so same-user pairs straddling the stop exist and were
-    // only findable through checkpoint-restored join state — if the
-    // state had been lost, those pairs would be missing and the
-    // equality above would have failed on count alone
   }
 
   test("stream-stream join soak: randomized chunk waves with a restart " +
     "per wave converge to the batch range join", Slow) {
-    // the soak discipline applied to symmetric JOIN state: whatever the
-    // arrival/restart schedule, the accumulated pair table must equal
-    // the batch join — every restart must restore both sides' buffered
-    // rows or cross-wave pairs go missing
-    import graft.streaming.{StreamingDedup, StreamingRangeJoin}
-    import graft.sink.ParquetSink
-    import org.apache.spark.sql.types.{LongType, StructField, StructType}
-    def tmp(name: String): String = {
-      val d = new java.io.File(
-        System.getProperty("java.io.tmpdir"), s"graft_test_$name")
-      ParquetSink.delete(d)
-      d.getAbsolutePath
-    }
-    val dir = "/root/testdata/sf0.001"
-    val nChunks = 6
-    val windowUs = 3600000000L
-    val batch = graft.queries.EventQueries.wRangeJoin(spark, dir)
-      .collect().map(_.toString).toSeq
-    val schema = StructType(Seq(
-      StructField("doc_id", LongType), StructField("ts", LongType),
-      StructField("user_id", LongType)))
+    // the soak discipline applied to symmetric JOIN state: every restart
+    // must restore both sides' buffered rows or cross-wave pairs go
+    // missing
     (0 until 2).foreach { round =>
-      val rnd = new scala.util.Random(7500 + round)
-      val cuts = (Seq(nChunks) ++
-        Seq.fill(3)(1 + rnd.nextInt(nChunks))).distinct.sorted
-      val feed = tmp(s"rjsoak_feed$round")
-      val wh = tmp(s"rjsoak_wh$round")
-      val evs = Tables.events(spark, dir)
-        .select(col("event_id").as("doc_id"), col("ts"), col("user_id"))
-      cuts.foreach { take =>
-        StreamingDedup.writeDocChunks(spark, evs, feed, nChunks, take,
-          schema = schema)
-        StreamingRangeJoin.runStream(spark, feed, wh, windowUs)
-      }
-      val streamed = ParquetSink.readFinal(
-        spark.read.parquet(s"$wh/range_pairs"),
-        Seq("event_a", "event_b"))
-        .select(col("user_id"), col("event_a"), col("event_b"),
-          col("gap_us"))
-        .orderBy(col("user_id"), col("event_a"), col("event_b"))
-        .collect().map(_.toString).toSeq
-      assert(streamed === batch, s"range-join soak round $round diverged")
+      val cuts = soakCuts(new scala.util.Random(7500 + round))
+      assert(soak("w_stream_range_join", cuts, () => false) ===
+        batchRows("w_stream_range_join"), s"range-join soak round $round")
     }
   }
 
@@ -720,143 +399,72 @@ class StreamingSpec extends AnyFunSuite {
       s"expected exactly [hour0->2, hour5->2], got $got")
   }
 
-  test("streaming rolling-7d grid (restart + mid-sequence merge) equals " +
-    "the batch RANGE-frame window exactly") {
-    val dir = "/root/testdata/sf0.001"
-    val streamed = graft.streaming.StreamingRolling
-      .wStreamRolling7d(spark, dir)
-      .collect().map(_.toString).toSeq
-    val batch = graft.queries.EventQueries.wRolling7d(spark, dir)
-      .collect().map(_.toString).toSeq
-    assert(streamed === batch) // identical rows, order, and doubles
-    assert(streamed.nonEmpty)
-  }
-
   test("rolling-grid soak: randomized chunk waves, checkpoint restarts, " +
     "and compactions converge to the batch window", Slow) {
-    // the crash-recovery depth test for the newest summing MV: events
-    // arrive in randomized WAVES, every wave is drained by a FRESH
-    // runStream call (i.e. a restart from the same checkpoint — only
-    // unseen files replay), and random waves are chased by a
-    // compaction merge. Whatever the arrival/restart/merge schedule,
-    // the read-time window must equal the one-shot batch aggregate.
-    import graft.streaming.StreamingRolling
-    import graft.sink.ParquetSink
-    def tmp(name: String): String = {
-      val d = new java.io.File(
-        System.getProperty("java.io.tmpdir"), s"graft_test_$name")
-      ParquetSink.delete(d)
-      d.getAbsolutePath
-    }
-    val dir = "/root/testdata/sf0.001"
-    val nChunks = 6
-    val batch = graft.queries.EventQueries.wRolling7d(spark, dir)
-      .collect().map(_.toString).toSeq
+    // every wave is drained by a FRESH drain (a restart from the same
+    // checkpoint — only unseen files replay), and random waves are
+    // chased by a compaction merge; the read-time window must equal the
+    // one-shot batch aggregate
     (0 until 2).foreach { round =>
       val rnd = new scala.util.Random(4200 + round)
-      val feed = tmp(s"rollsoak_feed$round")
-      val wh = tmp(s"rollsoak_wh$round")
-      val evs = Tables.events(spark, dir)
-        .select(col("event_id").as("doc_id"), col("ts"), col("event_type"),
-          col("value"))
-      // waves: strictly growing prefixes of the deterministic chunk
-      // sequence, ending with the full corpus
-      val cuts = (Seq(nChunks) ++
-        Seq.fill(3)(1 + rnd.nextInt(nChunks))).distinct.sorted
-      cuts.foreach { take =>
-        StreamingRolling.writeWave(spark, evs, feed, nChunks, take)
-        StreamingRolling.runStream(spark, feed, wh) // restart per wave
-        if (rnd.nextBoolean())
-          ParquetSink.compactSummed(spark, s"$wh/rolling_summed",
-            Seq("event_type", "epoch_day"), Seq("day_dec"))
-      }
-      val streamed = StreamingRolling.readRolling(spark, wh)
-        .collect().map(_.toString).toSeq
-      assert(streamed === batch, s"soak round $round diverged")
+      val cuts = soakCuts(rnd)
+      assert(soak("w_stream_rolling_7d", cuts, () => rnd.nextBoolean()) ===
+        batchRows("w_stream_rolling_7d"), s"soak round $round diverged")
     }
   }
 
   test("spans+retention MV soak: randomized chunk waves with a restart " +
     "per wave converge to the batch answers", Slow) {
-    // the rolling-grid soak discipline applied to the two newest MVs:
-    // whatever the arrival/restart schedule, the read-time report must
-    // equal the one-shot batch answer (PK-FINAL state absorbs replays)
-    import graft.streaming.{StreamingDedup, StreamingRetention, StreamingSpans}
-    import graft.sink.ParquetSink
-    import org.apache.spark.sql.types.{DoubleType, LongType, StringType,
-      StructField, StructType}
-    def tmp(name: String): String = {
-      val d = new java.io.File(
-        System.getProperty("java.io.tmpdir"), s"graft_test_$name")
-      ParquetSink.delete(d)
-      d.getAbsolutePath
-    }
-    val dir = "/root/testdata/sf0.001"
-    val nChunks = 6
-    val batchSpans = graft.llm.Dedup.dDupSpans(spark, dir)
-      .collect().map(_.toString).toSeq
-    graft.QueryCaches.releaseAll()
-    val batchRet = graft.queries.EventQueries.gRetentionCohorts(spark, dir)
-      .collect().map(_.toString).toSeq
-    val retSchema = StructType(Seq(
-      StructField("doc_id", LongType), StructField("ts", LongType),
-      StructField("user_id", LongType), StructField("event_type", StringType),
-      StructField("value", DoubleType)))
+    // PK-FINAL state absorbs replays: whatever the arrival/restart
+    // schedule, the read-time report equals the one-shot batch answer
     (0 until 2).foreach { round =>
-      val rnd = new scala.util.Random(5300 + round)
-      val cuts = (Seq(nChunks) ++
-        Seq.fill(3)(1 + rnd.nextInt(nChunks))).distinct.sorted
-
-      val feedS = tmp(s"spansoak_feed$round")
-      val whS = tmp(s"spansoak_wh$round")
-      val corpus = graft.llm.Dedup.spansCorpus(
-        Tables.documents(spark, dir)).localCheckpoint()
-      cuts.foreach { take =>
-        StreamingDedup.writeDocChunks(spark, corpus, feedS, nChunks, take)
-        StreamingSpans.runStream(spark, feedS, whS) // restart per wave
+      val cuts = soakCuts(new scala.util.Random(5300 + round))
+      Seq("d_stream_spans", "g_stream_retention").foreach { name =>
+        assert(soak(name, cuts, () => false) === batchRows(name),
+          s"$name soak round $round")
       }
-      val wins = ParquetSink.readFinal(
-        spark.read.parquet(s"$whS/spans_index"), Seq("doc_id", "pos"))
-        .select("doc_id", "pos", "win")
-      val lengths = ParquetSink.readFinal(
-        spark.read.parquet(s"$whS/spans_docs"), Seq("doc_id"))
-        .withColumn("n_tokens",
-          size(graft.llm.TextAnalysis.tokens(col("text"))).cast("long"))
-        .select("doc_id", "n_tokens")
-      val streamedSpans = graft.llm.Dedup.spansFromWindows(wins, lengths)
-        .orderBy(col("doc_id")).collect().map(_.toString).toSeq
-      assert(streamedSpans === batchSpans, s"spans soak round $round")
-
-      val feedR = tmp(s"retsoak_feed$round")
-      val whR = tmp(s"retsoak_wh$round")
-      val evs = Tables.events(spark, dir)
-        .select(col("event_id").as("doc_id"), col("ts"), col("user_id"),
-          col("event_type"), col("value"))
-      cuts.foreach { take =>
-        StreamingDedup.writeDocChunks(spark, evs, feedR, nChunks, take,
-          schema = retSchema)
-        StreamingRetention.runStream(spark, feedR, whR)
-      }
-      val act = ParquetSink.readFinal(
-        spark.read.parquet(s"$whR/retention_activity"),
-        Seq("user_id", "epoch_day"))
-        .select("user_id", "epoch_day")
-      val streamedRet =
-        graft.queries.EventQueries.retentionFromActivity(act)
-          .collect().map(_.toString).toSeq
-      assert(streamedRet === batchRet, s"retention soak round $round")
     }
   }
 
-  test("streaming corpus clean (checkpointed, mid-stream restart) " +
-    "converges to the batch pipeline's surviving corpus") {
-    import graft.streaming.StreamingCorpusClean
-    val dir = "/root/testdata/sf0.001"
-    val streamed = StreamingCorpusClean.pipeStreamClean(spark, dir)
-      .collect().map(_.toString).sorted.toSeq
-    val batch = graft.llm.CorpusPipeline.pipeCorpusClean(spark, dir)
-      .collect().map(_.toString).sorted.toSeq
-    assert(streamed === batch)
-    assert(streamed.nonEmpty)
+  TwinProperty.tests("StreamingSpec").foreach { case (title, twins) =>
+    test(title)(twins.foreach(TwinProperty.check(spark, _)))
   }
+
+  private val soakChunks = 6
+
+  /** Strictly growing prefixes of the chunk sequence, ending with the
+    * whole feed. */
+  private def soakCuts(rnd: scala.util.Random): Seq[Int] =
+    (Seq(soakChunks) ++ Seq.fill(3)(1 + rnd.nextInt(soakChunks)))
+      .distinct.sorted
+
+  /** Land the twin's feed wave by wave (`cuts` of a 6-chunk feed), drain
+    * once per wave — a restart from the same checkpoint — and run its
+    * between-waves step after a wave whenever `merge()` says so; return
+    * the twin's read. */
+  private def soak(name: String, cuts: Seq[Int],
+      merge: () => Boolean): Seq[String] = {
+    import graft.streaming.StreamTwin
+    val twin = StreamTwin.byName(name)
+    val feed = graft.sink.ParquetSink.scratchDir(s"soak_feed_$name")
+    val wh = graft.sink.ParquetSink.scratchDir(s"soak_wh_$name")
+    val rows = twin.feed(spark, TwinProperty.dir)
+    cuts.foreach { take =>
+      StreamTwin.writeDocChunks(spark, rows, feed, soakChunks, take,
+        twin.schema)
+      StreamTwin.drain(spark, twin, feed, wh)
+      if (merge()) twin.between(spark, wh)
+    }
+    twin.read(spark, wh).collect().map(_.toString).toSeq
+  }
+
+  /** The rows of a twin's batch query. */
+  private def batchRows(twin: String): Seq[String] = {
+    val rows = SparkEntry.queries(
+      graft.streaming.StreamTwin.byName(twin).batch)(spark, TwinProperty.dir)
+      .collect().map(_.toString).toSeq
+    QueryCaches.releaseAll()
+    rows
+  }
+
 }

@@ -3,7 +3,8 @@
 
 Usage: python3 tools/check.py <sfDir> <verifyOutDir>
 
-Reads each <verifyOutDir>/<name> parquet (Spark result), runs the
+Reads each <verifyOutDir>/<name> parquet (Spark result; a <name>.FAILED
+marker left by a query that threw is reported as its FAIL reason), runs the
 matching oracle SQL from oracle_sql.json in DuckDB over the sfDir
 parquet tables, and compares: columns sorted by name, rows sorted,
 values compared exactly (floats bit-for-bit, NaN==NaN).
@@ -46,6 +47,11 @@ def main():
     n_pass = n_fail = 0
     for name, sql in sorted(oracle.items()):
         res_dir = Path(out_dir) / name
+        marker = Path(out_dir) / f"{name}.FAILED"
+        if marker.exists():
+            print(f"FAIL {name}: query failed: {marker.read_text().strip()}")
+            n_fail += 1
+            continue
         if not res_dir.exists():
             print(f"FAIL {name}: no spark output")
             n_fail += 1
